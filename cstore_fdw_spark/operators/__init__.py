@@ -30,6 +30,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cstore_fdw_spark.session import (
+    EXCLUDED_RULES_CONF, offline_broadcast_budget, set_conf)
+
 
 @dataclass
 class QuerySpec:
@@ -53,34 +56,54 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-#: persisted/localCheckpoint'ed intermediates created by the CURRENT
-#: builder invocation. Builders return lazy DataFrames, so they can never
-#: unpersist their own caches (the caller hasn't run the query yet); left
-#: alone, a long-lived session (the driver's 131-query correctness sweep,
-#: a 30-execution bench run) accumulates every cached prefix/signature
-#: table from every invocation until the JVM heap fills (the round-3
-#: BENCH OOM). Instead each builder registers its caches here via
-#: :func:`track_cache`, and the NEXT builder invocation releases them —
-#: cache residency is bounded at one query's working set. Contract: a
-#: builder's returned DataFrame is valid until the next builder runs
-#: (every harness — driver gate, bench, local gate, tests — consumes
-#: results sequentially).
-_BUILD_CACHES: list[DataFrame] = []
+#: undo entries of the CURRENT builder invocation, run newest first by
+#: :func:`release_build_caches` at the next builder invocation (or an
+#: explicit ``clear_caches``). Two kinds share the list:
+#:
+#: - unpersist calls for persisted/localCheckpoint'ed intermediates
+#:   (:func:`track_cache`). Builders return lazy DataFrames, so they can
+#:   never unpersist their own caches (the caller hasn't run the query
+#:   yet); left alone, a long-lived session (the driver's 131-query
+#:   correctness sweep, a 30-execution bench run) accumulates every
+#:   cached prefix/signature table from every invocation until the JVM
+#:   heap fills (the round-3 BENCH OOM). Cache residency is bounded at
+#:   one query's working set.
+#: - conf restores for per-query session overrides
+#:   (:func:`override_conf`), each putting back the value the session
+#:   had before the build.
+#:
+#: Contract: a builder's returned DataFrame — with its caches and its
+#: conf overrides — is valid until the next builder runs (every harness —
+#: driver gate, bench, local gate, tests — consumes results sequentially).
+_BUILD_CACHES: list[Callable[[], object]] = []
 
 
 def track_cache(df: DataFrame) -> DataFrame:
     """Register a persisted/checkpointed intermediate for deferred release
     at the next builder invocation (or an explicit ``clear_caches``)."""
-    _BUILD_CACHES.append(df)
+    _BUILD_CACHES.append(df.unpersist)
     return df
 
 
+def override_conf(spark: SparkSession, key: str, value: str) -> None:
+    """Set a session conf for the current build and its execution; the
+    next builder invocation (or ``clear_caches``) restores the value the
+    session had. For ``EXCLUDED_RULES_CONF`` ``value`` is one rule,
+    appended to the session's list when absent."""
+    if key == EXCLUDED_RULES_CONF:
+        rules = [r.strip() for r in (spark.conf.get(key, None) or "")
+                 .split(",") if r.strip()]
+        value = ",".join(rules if value in rules else rules + [value])
+    _BUILD_CACHES.append(set_conf(spark, key, value))
+
+
 def release_build_caches() -> None:
-    """Unpersist every intermediate tracked since the last release."""
+    """Run every undo entry registered since the last release, newest
+    first; one that fails does not stop the ones behind it."""
     while _BUILD_CACHES:
-        df = _BUILD_CACHES.pop()
+        undo = _BUILD_CACHES.pop()
         try:
-            df.unpersist()
+            undo()
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
 
@@ -125,17 +148,8 @@ def scratch_catalog(spark, sf_dir: str, tag: str, build):
     if not os.path.exists(marker):
         shutil.rmtree(wh, ignore_errors=True)
         cat = CStoreCatalog(spark, warehouse=wh)
-        # offline-build broadcast budget: the one-time table build can
-        # broadcast sides whose subtrees are expensive at build scale
-        # (the 60 M-row v1.7 file-set write starved the 300 s
-        # interactive default at g10.0) — same offline-path rationale
-        # as similarity._cached_codebook; restored after the build
-        prev = spark.conf.get("spark.sql.broadcastTimeout", "300")
-        try:
-            spark.conf.set("spark.sql.broadcastTimeout", "3600")
+        with offline_broadcast_budget(spark):
             build(cat)
-        finally:
-            spark.conf.set("spark.sql.broadcastTimeout", prev)
         with open(marker, "w") as fh:
             fh.write(os.path.abspath(sf_dir))
         return cat
@@ -149,28 +163,8 @@ def register(name: str, oracle: str | None = None, category: str = "general",
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            release_build_caches()  # previous query's caches die here
-            # per-query conf hygiene: a prior builder's fine-coalescing
-            # opt-in (session.set_fine_coalescing) must not leak into
-            # queries that are faster at the default floor
-            from cstore_fdw_spark.session import (
-                ADAPTIVE_CONF, CBO_CONF, CBO_JOINREORDER_CONF,
-                DEFAULT_MIN_PARTITION_SIZE, EXCLUDED_RULES_CONF,
-                MIN_PARTITION_SIZE_CONF)
-            try:
-                spark.conf.set(MIN_PARTITION_SIZE_CONF,
-                               DEFAULT_MIN_PARTITION_SIZE)
-                # likewise un-leak a prior builder's static-planning
-                # opt-out (session.set_static_planning)
-                spark.conf.set(ADAPTIVE_CONF, "true")
-                # ... and a prior builder's CBO opt-out (session.set_no_cbo)
-                spark.conf.set(CBO_CONF, "true")
-                spark.conf.set(CBO_JOINREORDER_CONF, "true")
-                # ... and a prior builder's optimizer-rule opt-out
-                # (session.set_no_generate_filter_inference)
-                spark.conf.unset(EXCLUDED_RULES_CONF)
-            except Exception:  # noqa: BLE001 — read-only conf surface
-                pass
+            # the previous build's caches and conf overrides end here
+            release_build_caches()
             return fn(spark, sf_dir)
 
         REGISTRY[name] = QuerySpec(name, wrapped, oracle, category,

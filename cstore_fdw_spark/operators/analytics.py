@@ -12,7 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from cstore_fdw_spark.operators import register, spread, table
+from cstore_fdw_spark.operators import (
+    override_conf, register, spread, table)
+from cstore_fdw_spark.session import CBO_CONF, CBO_JOINREORDER_CONF
 
 
 @register(
@@ -1710,15 +1712,14 @@ def sketch_hyperloglog_distinct(spark, sf_dir):
     micro-batches, so ``streaming.analytics.run_hll_available_now``
     maintains the identical sketch on an unbounded stream and runs
     THIS function's finisher (``hll_estimate_from_registers``)."""
-    from cstore_fdw_spark.session import set_no_cbo
-
     # bare-path read + the widest expression tree in the bench set (the
     # 1024-entry ln-ppm literal inside the finisher): CBO's stats
     # visitor re-costs it at every AQE stage boundary for zero benefit
-    # (no catalog stats exist) — measured 2.93 s → 1.77 s at sf0.1
-    # (see session.set_no_cbo; the registry restores the conf default
-    # before the next build)
-    set_no_cbo(spark)
+    # (no catalog stats exist) — interleaved min-of-3 at sf0.1 measured
+    # 2.93 s with CBO vs 1.77 s without; every other bench query was
+    # within noise, and catalog-stats queries need CBO, so per-query
+    override_conf(spark, CBO_CONF, "false")
+    override_conf(spark, CBO_JOINREORDER_CONF, "false")
     est = hll_estimate_from_registers(
         hll_register_rollup(table(spark, sf_dir, "lineitem")))
     # the finisher is table-agnostic (returns ``grp``); THIS query owns

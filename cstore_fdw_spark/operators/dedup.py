@@ -23,9 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from cstore_fdw_spark.operators import register, spread, table, track_cache
-from cstore_fdw_spark.session import (set_fine_coalescing,
-                                      set_no_generate_filter_inference)
+from cstore_fdw_spark.operators import (
+    override_conf, register, spread, table, track_cache)
+from cstore_fdw_spark.session import (
+    EXCLUDED_RULES_CONF, FINE_MIN_PARTITION_SIZE, INFER_FROM_GENERATE_RULE,
+    MIN_PARTITION_SIZE_CONF)
 
 #: the duplicated corpus used by exact-dedup demos: documents ∪ documents
 #: with shifted ids, so every text has exactly one duplicate. (The driver's
@@ -199,9 +201,10 @@ def ppjoin_jaccard_pairs(item_sets: DataFrame, tau: float,
     even when the source scan is one split."""
     # CPU-dense-per-byte shuffles (digest self-join + verify): opt into
     # the fine AQE coalescing floor — measured 2x at sf0.1 (token
-    # pipeline 6.4 s vs 11.5 s); the registry resets the conf before the
-    # next query builds (session.set_fine_coalescing)
-    set_fine_coalescing(item_sets.sparkSession)
+    # pipeline 6.4 s vs 11.5 s); broadcast-heavy queries are faster at
+    # the session's 1m floor (q3: 1.18 s vs 1.46 s), so it is per-query
+    override_conf(item_sets.sparkSession, MIN_PARTITION_SIZE_CONF,
+                  FINE_MIN_PARTITION_SIZE)
     # The per-doc sorted hash set is built as ONE projection — hash each
     # item inside transform(), no explode, no collect_set shuffle (the
     # earlier exploded-rows form materialized every (doc, item) string
@@ -799,8 +802,11 @@ def minhash_pairs_from_shingled(shingled: DataFrame,
     # filter (r17 inherited commit) did NOT fix this: the committed
     # before/after plans were identical because the inference puts the
     # filter right back. The inferred filter is semantics-free (explode
-    # already drops empty arrays); see session.py for the full rationale.
-    set_no_generate_filter_inference(shingled.sparkSession)
+    # already drops empty arrays); what is lost is only shuffling the
+    # rare zero-shingle doc's row once, and queries that explode STORED
+    # columns keep the inference.
+    override_conf(shingled.sparkSession, EXCLUDED_RULES_CONF,
+                  INFER_FROM_GENERATE_RULE)
     # persist() materializes the per-shingle hashes once (the expensive
     # shingle build + md5); signatures, band keys, sizes, and
     # verification keys all derive from it.
@@ -988,7 +994,8 @@ def minhash_band_candidates(shingled: DataFrame) -> DataFrame:
     # rarity-prefix aggregate output, so the inferred filter costs a
     # per-doc transform(slice(...)) re-evaluation rather than a
     # scan-level gram build — smaller, but the same pure overhead)
-    set_no_generate_filter_inference(shingled.sparkSession)
+    override_conf(shingled.sparkSession, EXCLUDED_RULES_CONF,
+                  INFER_FROM_GENERATE_RULE)
     ex = track_cache(shingle_hashes(shingled).persist())
     # parsed-SQL form, one py4j call per aggregate (the Column-chain
     # form cost ~6 round-trips x 32 hashes per build; same tree — see
@@ -1354,7 +1361,7 @@ def dedup_simhash(spark, sf_dir):
                          " t -> t <> ''))")).alias("token"))
     # chunk-block self-join over 4x16-bit keys: CPU-dense per byte, same
     # fine-coalescing rationale as ppjoin_jaccard_pairs
-    set_fine_coalescing(spark)
+    override_conf(spark, MIN_PARTITION_SIZE_CONF, FINE_MIN_PARTITION_SIZE)
     sig = simhash_signatures(tokens)
     # inline() explodes the (chunk, ck) struct array straight to columns
     # — one parsed expression instead of a ~60-call explode/restructure
@@ -1699,7 +1706,10 @@ def text_ngram_containment(spark, sf_dir):
                  .select("doc_id", "lang",
                          F.expr(_WORD_GRAM_ARR).alias("items")))
     tau = CONTAINMENT_TAU
-    set_fine_coalescing(item_sets.sparkSession)
+    # gram-digest self-join: CPU-dense per byte, same fine-coalescing
+    # rationale as ppjoin_jaccard_pairs
+    override_conf(item_sets.sparkSession, MIN_PARTITION_SIZE_CONF,
+                  FINE_MIN_PARTITION_SIZE)
     sets = track_cache(
         item_sets.select(
             "doc_id", "lang",

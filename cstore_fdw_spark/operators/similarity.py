@@ -14,8 +14,9 @@ import hashlib
 from pyspark.sql import Column, functions as F
 from pyspark.sql.window import Window
 
-from cstore_fdw_spark.operators import (register, spread, table,
-                                        track_cache)
+from cstore_fdw_spark.operators import (
+    override_conf, register, release_build_caches, spread, table, track_cache)
+from cstore_fdw_spark.session import ADAPTIVE_CONF, offline_broadcast_budget
 
 N_QUERIES = 5    # demo query set: vec_id < 5
 TOP_K = 3
@@ -791,18 +792,8 @@ def _cached_codebook(spark, sf_dir, tag, params, build):
         if tag not in CORPUS_SIZED_TAGS:
             # codebooks are model-sized: one file reads in one task
             df = df.coalesce(1)
-        # offline-build broadcast budget: the artifact write's plan can
-        # broadcast a side whose subtree is itself expensive at build
-        # scale (the ivfcodes encode at 200k vectors starved the
-        # broadcast future past the 300 s interactive default and
-        # killed the g10 build). Index training is the train-once
-        # OFFLINE path — give it an offline timeout, restore after.
-        prev = spark.conf.get("spark.sql.broadcastTimeout", "300")
-        try:
-            spark.conf.set("spark.sql.broadcastTimeout", "3600")
+        with offline_broadcast_budget(spark):
             df.write.mode("overwrite").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.broadcastTimeout", prev)
         TRAINED_TAGS.append(tag)
     return spark.read.parquet(path)
 
@@ -830,16 +821,11 @@ def ensure_index_artifacts(spark, sf_dir):
     and reports the wall cost as its own ``index_build_sec`` metric, so
     the per-query cold/warm numbers measure query SERVING rather than a
     one-time build only a fresh host pays."""
-    from cstore_fdw_spark.operators import release_build_caches
-    from cstore_fdw_spark.session import ADAPTIVE_CONF
-
     n0 = len(TRAINED_TAGS)
     vector_quantize_pq(spark, sf_dir)   # trains "rawpq" on a miss
     vector_ivf_pq_topk(spark, sf_dir)   # trains "ivfc" + "ivfpq"
-    release_build_caches()              # drop the builder's resid persist
-    # un-leak the IVF builder's static-planning opt-out (the registry
-    # wrapper normally restores this; we called the raw builders)
-    spark.conf.set(ADAPTIVE_CONF, "true")
+    # the raw builders' caches and conf overrides end here
+    release_build_caches()
     return TRAINED_TAGS[n0:]
 
 
@@ -1255,12 +1241,13 @@ def _ivfadc_adc(spark, sf_dir):
     asymmetric distance (see ``vector_ivf_pq_topk`` for the full
     story; ``vector_ivf_pq_rerank_topk`` consumes the same frame as a
     shortlist generator)."""
-    from cstore_fdw_spark.session import set_static_planning
-
     # dozens of bounded mini-stages (trainer chains on a cache miss,
     # one-row codebook aggregates, probe tables) where AQE's
-    # per-exchange job barriers cost more than the data
-    set_static_planning(spark)
+    # per-exchange job barriers cost more than the data (A/B at sf0.1:
+    # ~9 s static vs ~12-18 s adaptive). Static planning is safe: the
+    # only corpus-sized shuffles are hash-partitioned by vec_id (no skew
+    # for AQE to fix) and every join side is an explicit broadcast()
+    override_conf(spark, ADAPTIVE_CONF, "false")
     e = table(spark, sf_dir, "embeddings")
     # --- coarse stage: home cell per vector, probed cells per query.
     # Unlike the sampled-centroid operators (ann_ivf_coarse,
