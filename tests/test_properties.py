@@ -404,8 +404,8 @@ def test_connected_components_from_pairs_shared_loop(spark):
 
 def test_generate_inference_optout_never_leaks_across_builders(
         spark, sf_dir):
-    """set_no_generate_filter_inference (the MinHash pipelines' per-query
-    InferFiltersFromGenerate opt-out) must be restored by the NEXT
+    """The MinHash pipelines' per-query InferFiltersFromGenerate opt-out
+    (``override_conf``) must be restored by the NEXT
     registered builder — queries that explode STORED columns keep the
     inference (it prunes empty-array rows before their exchange)."""
     from cstore_fdw_spark.operators import load_all
@@ -428,9 +428,14 @@ def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
     then again post-exchange). Pins the r17 per-query rule opt-out."""
     from cstore_fdw_spark.operators import load_all
 
+    import contextlib
+    import io
+
     df = load_all()["dedup_minhash_lsh"].builder(spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        df.explain(mode="formatted")
+    plan = out.getvalue()
     for line in plan.splitlines():
         if line.startswith("Condition") and "array_distinct" in line:
             raise AssertionError(
@@ -438,7 +443,7 @@ def test_minhash_shingle_filter_not_pushed_to_scan(spark, sf_dir):
 
 
 def test_cbo_optout_never_leaks_across_builders(spark, sf_dir):
-    """set_no_cbo (the HLL finisher's per-query CBO opt-out) must be
+    """The HLL finisher's per-query CBO opt-out (``override_conf``) must be
     restored by the NEXT registered builder, exactly like the
     fine-coalescing and static-planning opt-ins — catalog-stats queries
     rely on the session CBO default."""
@@ -452,3 +457,120 @@ def test_cbo_optout_never_leaks_across_builders(spark, sf_dir):
     reg["dedup_exact"].builder(spark, sf_dir)
     assert spark.conf.get(CBO_CONF) == "true"
     assert spark.conf.get(CBO_JOINREORDER_CONF) == "true"
+
+
+def test_generate_inference_optout_composes_with_session_rules(
+        spark, sf_dir):
+    """The MinHash rule opt-out appends to a session-level
+    excludedRules list instead of replacing it, and the next build puts
+    that list back exactly."""
+    from cstore_fdw_spark.operators import load_all, release_build_caches
+    from cstore_fdw_spark.session import (EXCLUDED_RULES_CONF,
+                                          INFER_FROM_GENERATE_RULE)
+
+    session_rules = "org.apache.spark.sql.catalyst.optimizer.LimitPushDown"
+    reg = load_all()
+    release_build_caches()  # earlier builds' restores must not run later
+    spark.conf.set(EXCLUDED_RULES_CONF, session_rules)
+    try:
+        reg["dedup_minhash_lsh"].builder(spark, sf_dir)
+        active = spark.conf.get(EXCLUDED_RULES_CONF).split(",")
+        assert active == [session_rules, INFER_FROM_GENERATE_RULE]
+        reg["dedup_exact"].builder(spark, sf_dir)
+        assert spark.conf.get(EXCLUDED_RULES_CONF) == session_rules
+    finally:
+        spark.conf.unset(EXCLUDED_RULES_CONF)
+
+
+def test_override_conf_twice_in_one_build_restores_original(spark):
+    """Overriding the same key twice in one build (two pipelines sharing
+    an opt-out) restores the value from before the FIRST override, and a
+    repeated rule opt-out is listed once."""
+    from cstore_fdw_spark.operators import override_conf, release_build_caches
+    from cstore_fdw_spark.session import (
+        EXCLUDED_RULES_CONF, INFER_FROM_GENERATE_RULE, MIN_PARTITION_SIZE_CONF)
+
+    release_build_caches()
+    before = spark.conf.get(MIN_PARTITION_SIZE_CONF)
+    override_conf(spark, MIN_PARTITION_SIZE_CONF, "256k")
+    override_conf(spark, MIN_PARTITION_SIZE_CONF, "512k")
+    override_conf(spark, EXCLUDED_RULES_CONF, INFER_FROM_GENERATE_RULE)
+    override_conf(spark, EXCLUDED_RULES_CONF, INFER_FROM_GENERATE_RULE)
+    assert spark.conf.get(MIN_PARTITION_SIZE_CONF) == "512k"
+    assert spark.conf.get(EXCLUDED_RULES_CONF) == INFER_FROM_GENERATE_RULE
+    release_build_caches()
+    assert spark.conf.get(MIN_PARTITION_SIZE_CONF) == before
+    assert spark.conf.get(EXCLUDED_RULES_CONF, None) is None
+
+
+def test_failing_undo_does_not_skip_conf_restores(spark):
+    """An undo entry that raises — here a tracked frame whose unpersist
+    fails — does not stop the conf restores queued behind it."""
+    from cstore_fdw_spark.operators import (
+        override_conf, release_build_caches, track_cache)
+    from cstore_fdw_spark.session import ADAPTIVE_CONF, CBO_CONF
+
+    class Unpersistable:
+        def unpersist(self):
+            raise RuntimeError("session already stopped")
+
+    release_build_caches()
+    before = (spark.conf.get(ADAPTIVE_CONF), spark.conf.get(CBO_CONF))
+    override_conf(spark, ADAPTIVE_CONF, "false")
+    override_conf(spark, CBO_CONF, "false")
+    track_cache(Unpersistable())
+    release_build_caches()
+    assert (spark.conf.get(ADAPTIVE_CONF), spark.conf.get(CBO_CONF)) \
+        == before
+
+
+def test_index_artifacts_restore_prior_adaptive_setting(spark, sf_dir):
+    """``ensure_index_artifacts`` runs the IVF builder, which plans
+    statically; afterwards adaptive execution is back at whatever value
+    the session had, not at a fixed default."""
+    from cstore_fdw_spark.operators import release_build_caches
+    from cstore_fdw_spark.operators.similarity import ensure_index_artifacts
+    from cstore_fdw_spark.session import ADAPTIVE_CONF
+
+    release_build_caches()
+    original = spark.conf.get(ADAPTIVE_CONF)
+    try:
+        for prior in ("false", "true"):
+            spark.conf.set(ADAPTIVE_CONF, prior)
+            ensure_index_artifacts(spark, sf_dir)
+            assert spark.conf.get(ADAPTIVE_CONF) == prior
+    finally:
+        spark.conf.set(ADAPTIVE_CONF, original)
+
+
+def test_operators_change_confs_only_through_scoped_primitives():
+    """Lint: operator code changes session confs only through
+    ``override_conf`` (undone by the next build) or the offline
+    broadcast budget (undone after the artifact write). A hand-rolled
+    ``spark.conf.set``/``conf.unset`` would outlive its query."""
+    import ast
+    import pathlib
+
+    import cstore_fdw_spark.operators as ops
+
+    allowed = {"override_conf", "offline_broadcast_budget"}
+    offenders = []
+
+    def visit(node, fn, path):
+        for child in ast.iter_child_nodes(node):
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in ("set", "unset")
+                    and isinstance(child.func.value, ast.Attribute)
+                    and child.func.value.attr == "conf"
+                    and fn not in allowed):
+                offenders.append(f"{path.name}:{child.lineno} in {fn}")
+            inner = child.name if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            visit(child, inner, path)
+
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        visit(ast.parse(path.read_text()), None, path)
+    assert not offenders, (
+        "conf changes outside override_conf / offline_broadcast_budget:\n"
+        + "\n".join(offenders))
