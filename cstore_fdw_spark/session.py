@@ -185,10 +185,6 @@ EXCLUDED_RULES_CONF = "spark.sql.optimizer.excludedRules"
 INFER_FROM_GENERATE_RULE = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
 
-BROADCAST_TIMEOUT_CONF = "spark.sql.broadcastTimeout"
-#: seconds; the interactive default is 300
-OFFLINE_BROADCAST_TIMEOUT = "3600"
-
 
 def set_conf(spark: SparkSession, key: str,
              value: str) -> Callable[[], None]:
@@ -213,7 +209,7 @@ def offline_broadcast_budget(spark: SparkSession):
     at build scale: the ivfcodes encode at 200k vectors and the 60 M-row
     v1.7 file-set write both starved the 300 s interactive default at
     g10.0. Serving queries keep the interactive default."""
-    undo = set_conf(spark, BROADCAST_TIMEOUT_CONF, OFFLINE_BROADCAST_TIMEOUT)
+    undo = set_conf(spark, "spark.sql.broadcastTimeout", "3600")  # seconds
     try:
         yield
     finally:
