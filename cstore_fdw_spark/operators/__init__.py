@@ -63,7 +63,7 @@ REGISTRY: dict[str, QuerySpec] = {}
 #: - unpersist calls for persisted/localCheckpoint'ed intermediates
 #:   (:func:`track_cache`). Builders return lazy DataFrames, so they can
 #:   never unpersist their own caches (the caller hasn't run the query
-#:   yet); left alone, a long-lived session (the driver's 131-query
+#:   yet); left alone, a long-lived session (a full-registry
 #:   correctness sweep, a 30-execution bench run) accumulates every
 #:   cached prefix/signature table from every invocation until the JVM
 #:   heap fills (the round-3 BENCH OOM). Cache residency is bounded at
@@ -74,7 +74,7 @@ REGISTRY: dict[str, QuerySpec] = {}
 #:
 #: Contract: a builder's returned DataFrame — with its caches and its
 #: conf overrides — is valid until the next builder runs (every harness —
-#: driver gate, bench, local gate, tests — consumes results sequentially).
+#: oracle gates, bench, tests — consumes results sequentially).
 _BUILD_CACHES: list[Callable[[], object]] = []
 
 
