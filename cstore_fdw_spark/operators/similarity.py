@@ -15,8 +15,9 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql.window import Window
 
 from cstore_fdw_spark.operators import (
-    override_conf, register, release_build_caches, spread, table, track_cache)
-from cstore_fdw_spark.session import ADAPTIVE_CONF, offline_broadcast_budget
+    BUILT_ARTIFACTS, artifact, override_conf, register, release_build_caches,
+    spread, table, track_cache)
+from cstore_fdw_spark.session import ADAPTIVE_CONF
 
 N_QUERIES = 5    # demo query set: vec_id < 5
 TOP_K = 3
@@ -773,29 +774,21 @@ def _cached_codebook(spark, sf_dir, tag, params, build):
     function of (corpus, trainer params), so like any real ANN
     deployment the index artifact is MAINTAINED, not recomputed per
     query — FAISS trains once at build time and serves millions of
-    queries. The trained (j, k, cvec) frame is persisted as parquet
-    under a scratch path keyed by corpus path + every trainer
-    parameter (so e.g. the quality gate's iters=0 probe never reads an
-    iters=2 book); doubles round-trip parquet bit-exactly, so cached
-    and freshly-trained books are indistinguishable to the oracles.
-    Same build-once discipline as ``scratch_catalog`` (the projection
-    warehouse); a crashed write has no _SUCCESS marker and retrains."""
-    import hashlib
-    import os
-    import tempfile
-
-    key = hashlib.md5((os.path.abspath(sf_dir) + "|" + repr(params))
-                      .encode()).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"cstore_cb_{tag}_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    queries. The trained (j, k, cvec) frame is persisted as parquet in
+    the maintained-artifact store (:func:`artifact`), keyed by corpus
+    path + every trainer parameter (so e.g. the quality gate's iters=0
+    probe never reads an iters=2 book); doubles round-trip parquet
+    bit-exactly, so cached and freshly-trained books are
+    indistinguishable to the oracles."""
+    def write(path):
         df = build()
         if tag not in CORPUS_SIZED_TAGS:
             # codebooks are model-sized: one file reads in one task
             df = df.coalesce(1)
-        with offline_broadcast_budget(spark):
-            df.write.mode("overwrite").parquet(path)
-        TRAINED_TAGS.append(tag)
-    return spark.read.parquet(path)
+        df.write.mode("overwrite").parquet(path)
+
+    return spark.read.parquet(
+        artifact(spark, sf_dir, f"cb_{tag}", params, write))
 
 
 #: artifact tags whose frame is corpus-sized (one row per vector) —
@@ -803,30 +796,23 @@ def _cached_codebook(spark, sf_dir, tag, params, build):
 CORPUS_SIZED_TAGS = frozenset({"ivfcodes"})
 
 
-#: codebook tags trained (artifact cache miss) since import — lets the
-#: bench distinguish a warm host ([] appended) from a fresh one where the
-#: one-time offline build actually ran
-TRAINED_TAGS: list = []
-
-
 def ensure_index_artifacts(spark, sf_dir):
-    """Force the maintained ANN index artifacts to exist without running
-    any serving query: train-once, serve-many (a real deployment builds
-    the FAISS-style index OFFLINE and serves millions of queries against
-    it — ``_cached_codebook``). Constructing the two builder plans
-    triggers any missing codebook training writes eagerly ("rawpq" for
-    the PQ family, "ivfc" + "ivfpq" for IVFADC); the queries themselves
-    never execute. Returns the tags that actually trained ([] on a host
-    that already has the artifacts). bench.py calls this during bring-up
-    and reports the wall cost as its own ``index_build_sec`` metric, so
-    the per-query cold/warm numbers measure query SERVING rather than a
-    one-time build only a fresh host pays."""
-    n0 = len(TRAINED_TAGS)
+    """Build every maintained artifact a benched query serves without
+    running a serving query (train-once, serve-many: a real deployment
+    builds its FAISS-style index OFFLINE). Constructing the two ANN
+    builders writes any missing codebook; the cstore v1.7 lineitem copy
+    is written directly. Returns the tags the store built ([] on a warm
+    host); bench.py reports the wall cost as ``index_build_sec``, so
+    per-query cold/warm numbers measure SERVING, not a one-time build."""
+    from cstore_fdw_spark.operators.relational import _cstore_fmt_artifact
+
+    n0 = len(BUILT_ARTIFACTS)
     vector_quantize_pq(spark, sf_dir)   # trains "rawpq" on a miss
-    vector_ivf_pq_topk(spark, sf_dir)   # trains "ivfc" + "ivfpq"
+    vector_ivf_pq_topk(spark, sf_dir)   # trains "ivfc" + "ivfpq" + codes
+    _cstore_fmt_artifact(spark, sf_dir)
     # the raw builders' caches and conf overrides end here
     release_build_caches()
-    return TRAINED_TAGS[n0:]
+    return BUILT_ARTIFACTS[n0:]
 
 
 def _train_ctes(src: str, pfx: str, m=None, subdim=None, k=None,

@@ -11,13 +11,19 @@ local-mode specific except the master URL default.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
 import shutil
 import tempfile
 from collections.abc import Callable
 from contextlib import contextmanager
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: local[N] threads and shuffle partitions; ``SPARK_GRAFT_CPUS`` overrides
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 # Parquet analogs of the reference's stripe/block layout
 # (reference cstore_fdw.h:34-35: stripe=150k rows, block=10k rows).
@@ -95,7 +101,7 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.cbo.joinReorder.enabled": "true",
     # --- Maintain stripe-like bounded files on write.
     "spark.sql.files.maxRecordsPerFile": "5000000",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": CPUS,
 }
 
 
@@ -107,10 +113,9 @@ def get_spark(app_name: str = "cstore_fdw_spark", master: str | None = None,
     manager is configured; on a real cluster, pass ``None`` with
     ``--master`` supplied externally and this just applies confs.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        master = f"local[{cpus}]"
+        master = f"local[{CPUS}]"
     if master:
         builder = builder.master(master)
     # In local[N] ONE JVM holds the driver, every executor thread, and
@@ -121,13 +126,16 @@ def get_spark(app_name: str = "cstore_fdw_spark", master: str | None = None,
     # the bench peaks far below it, and a LARGER heap measurably hurts —
     # at 64g G1's young generation grows to tens of GB and one allocation
     # burst per bench run ate a multi-second collection pause (observed
-    # as a random query 3-4x over its steady-state time). Set before JVM
-    # launch (PySpark passes builder confs to spark-submit at gateway
-    # start); env-overridable for bigger scale factors. On a real
+    # as a random query 3-4x over its steady-state time). Below 32 GB of
+    # RAM it is half the RAM, so the heap never outgrows the host. Set
+    # before JVM launch (PySpark passes builder confs to spark-submit at
+    # gateway start); env-overridable for bigger scale factors. On a real
     # cluster spark-submit's own --driver-memory wins.
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     builder = builder.config(
         "spark.driver.memory",
-        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                       f"{min(16 << 10, ram_mb // 2)}m"))
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
     for k, v in (extra_confs or {}).items():
@@ -137,24 +145,37 @@ def get_spark(app_name: str = "cstore_fdw_spark", master: str | None = None,
     return spark
 
 
+@functools.cache
+def package_fingerprint() -> str:
+    """Hash of every ``cstore_fdw_spark/**/*.py`` source, read once per
+    process; it names the shipped zip and keys every maintained artifact."""
+    pkg = Path(__file__).parent
+    h = hashlib.md5()
+    for f in sorted(pkg.rglob("*.py")):
+        h.update(f"{f.relative_to(pkg)}\0".encode() + f.read_bytes())
+    return h.hexdigest()[:16]
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make ``cstore_fdw_spark`` importable on executors' Python workers.
 
     The driver process may run from any cwd; Pandas-UDF closures reference
     this package by module name, so workers need it on their path. A zip of
     the package is shipped once per session via ``addPyFile`` (works on
-    local and cluster mode alike).
+    local and cluster mode alike). Named by the package fingerprint and
+    published by ``os.replace``: never another version's or a torn zip.
     """
     if getattr(spark, "_cstore_pkg_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_base = os.path.join(tempfile.gettempdir(),
-                            f"cstore_fdw_spark_pkg_{os.getpid()}")
-    zip_path = zip_base + ".zip"
+    zip_path = os.path.join(
+        tempfile.gettempdir(),
+        f"cstore_fdw_spark_pkg_{package_fingerprint()}.zip")
     if not os.path.exists(zip_path):
-        shutil.make_archive(zip_base, "zip",
-                            root_dir=os.path.dirname(pkg_dir),
-                            base_dir=os.path.basename(pkg_dir))
+        tmp = shutil.make_archive(f"{zip_path}.tmp-{os.getpid()}", "zip",
+                                  root_dir=os.path.dirname(pkg_dir),
+                                  base_dir=os.path.basename(pkg_dir))
+        os.replace(tmp, zip_path)
     spark.sparkContext.addPyFile(zip_path)
     spark._cstore_pkg_shipped = True  # type: ignore[attr-defined]
 

@@ -93,7 +93,7 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=4)
     ap.add_argument("--skip-index-build", action="store_true",
                     help="skip ensure_index_artifacts (valid when no "
-                         "timed query serves an ANN index)")
+                         "timed query serves a maintained artifact)")
     args = ap.parse_args()
     dirs = args.dirs.split(",")
     names = args.queries.split(",")
@@ -115,11 +115,6 @@ def main() -> None:
         t0 = time.perf_counter()
         if not args.skip_index_build:
             ensure_index_artifacts(spark, d)  # offline build, reported apart
-        if "scan_cstore_format_roundtrip" in names:
-            # marker-guarded v1.7 file-set write happens at builder
-            # construction — prebuild so the timed runs measure SERVING
-            # (bench.py's bring-up discipline)
-            registry["scan_cstore_format_roundtrip"].builder(spark, d)
         index_build[label] = round(time.perf_counter() - t0, 3)
         clear_caches(spark)
         for n in names:

@@ -343,42 +343,165 @@ def test_ann_ladder_recall_quality_gate(spark, tmp_path):
     clear_caches(spark)
 
 
-def test_index_artifacts_train_once_serve_many(spark, sf_dir):
+def _fresh_store(tmp_path, monkeypatch):
+    """Point the maintained-artifact store at an empty scratch dir."""
+    import tempfile
+
+    store = tmp_path / "store"
+    store.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(store))
+    return store
+
+
+def _corpus_copy(tmp_path, sf_dir):
+    """A private copy of the fixture tables, safe to rewrite."""
+    import shutil
+
+    corpus = tmp_path / "sf"
+    shutil.copytree(sf_dir, corpus)
+    return str(corpus)
+
+
+def test_index_artifacts_train_once_serve_many(spark, sf_dir, tmp_path,
+                                               monkeypatch):
     """The bench bring-up contract (`ensure_index_artifacts`): the first
     call on a fresh host trains every missing codebook artifact; a second
-    call trains NOTHING (pure artifact-cache reads), leaves no persisted
+    call trains NOTHING (pure artifact-store reads), leaves no persisted
     RDDs behind, and restores adaptive planning — so BENCH per-query
     cold/warm numbers measure query serving, never the one-time offline
     index build (train-once/serve-many, `_cached_codebook`)."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     from cstore_fdw_spark.operators import similarity as sim
     from cstore_fdw_spark.session import ADAPTIVE_CONF
 
-    # scope the wipe to THIS sf_dir's keys: other fixtures' artifacts
-    # (the sf0.01 gate's) must survive a test run
-    keyable = hashlib.md5
-    suffixes = set()
-    for tag, params in (
-        ("rawpq", ("rawpq", sim.PQ_M, sim.PQ_SUBDIM, sim.PQ_K,
-                   sim.PQ_TRAIN_N, sim.PQ_ITERS, sim.FX_SCALE)),):
-        suffixes.add(keyable((os.path.abspath(sf_dir) + "|" + repr(params))
-                             .encode()).hexdigest()[:16])
-    for p in glob.glob(os.path.join(tempfile.gettempdir(), "cstore_cb_*")):
-        if p.rsplit("_", 1)[-1] in suffixes:
-            shutil.rmtree(p, ignore_errors=True)
-    # ivfc/ivfpq keys embed a corpus-sized nlist — wipe by reproducing
-    # is brittle; instead just assert the SECOND call trains nothing
+    _fresh_store(tmp_path, monkeypatch)
     trained1 = sim.ensure_index_artifacts(spark, sf_dir)
-    assert "rawpq" in trained1, f"fresh host should train rawpq: {trained1}"
+    assert "cb_rawpq" in trained1, \
+        f"fresh host should train rawpq: {trained1}"
     trained2 = sim.ensure_index_artifacts(spark, sf_dir)
     assert trained2 == [], f"warm host retrained: {trained2}"
     assert spark.conf.get(ADAPTIVE_CONF) == "true"
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
+
+
+def test_artifact_second_call_is_a_hit(spark, sf_dir, tmp_path,
+                                       monkeypatch):
+    """A warm store serves the published artifact and builds nothing."""
+    from cstore_fdw_spark.operators import BUILT_ARTIFACTS
+    from cstore_fdw_spark.operators.relational import _cstore_fmt_artifact
+
+    _fresh_store(tmp_path, monkeypatch)
+    corpus = _corpus_copy(tmp_path, sf_dir)
+    n0 = len(BUILT_ARTIFACTS)
+    first, _ddl = _cstore_fmt_artifact(spark, corpus)
+    second, _ddl = _cstore_fmt_artifact(spark, corpus)
+    assert second == first
+    assert BUILT_ARTIFACTS[n0:] == ["fmt_s37500"]
+
+
+def test_artifact_rebuilds_after_input_rewrite(spark, sf_dir, tmp_path,
+                                              monkeypatch):
+    """Regenerated inputs miss: the store rebuilds, the query serves the
+    new data, and the stale artifact is gone from its slot."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from cstore_fdw_spark.operators import BUILT_ARTIFACTS
+    from cstore_fdw_spark.operators.relational import (
+        _cstore_fmt_artifact, scan_cstore_format_roundtrip)
+
+    _fresh_store(tmp_path, monkeypatch)
+    corpus = _corpus_copy(tmp_path, sf_dir)
+    lineitem = os.path.join(corpus, "lineitem.parquet")
+
+    def served():
+        return {r.l_returnflag: r.n for r in
+                scan_cstore_format_roundtrip(spark, corpus).collect()}
+
+    before = served()
+    old, _ddl = _cstore_fmt_artifact(spark, corpus)
+    t = pq.read_table(lineitem)
+    kept = t.filter(pc.equal(t["l_returnflag"], "R"))
+    assert 0 < kept.num_rows < t.num_rows
+    pq.write_table(kept, lineitem)
+    n0 = len(BUILT_ARTIFACTS)
+    after = served()
+    assert BUILT_ARTIFACTS[n0:] == ["fmt_s37500"]
+    assert after == {"R": kept.num_rows} != before
+    new, _ddl = _cstore_fmt_artifact(spark, corpus)
+    assert new != old and not os.path.exists(old)
+    assert os.listdir(os.path.dirname(new)) == [os.path.basename(new)]
+
+
+def test_artifact_rebuilds_after_code_change(spark, sf_dir, tmp_path,
+                                            monkeypatch):
+    """An edited package (a new source fingerprint) misses and rebuilds,
+    replacing what the old code wrote."""
+    import os
+
+    import cstore_fdw_spark.operators as ops
+
+    _fresh_store(tmp_path, monkeypatch)
+    corpus = _corpus_copy(tmp_path, sf_dir)
+    writes = []
+
+    def write(path):
+        writes.append(path)
+        with open(os.path.join(path, "v"), "w") as fh:
+            fh.write(str(len(writes)))
+
+    old = ops.artifact(spark, corpus, "probe", ("p",), write)
+    assert ops.artifact(spark, corpus, "probe", ("p",), write) == old
+    monkeypatch.setattr(ops, "package_fingerprint", lambda: "edited")
+    new = ops.artifact(spark, corpus, "probe", ("p",), write)
+    assert len(writes) == 2 and new != old and not os.path.exists(old)
+    with open(os.path.join(new, "v")) as fh:
+        assert fh.read() == "2"
+
+
+def test_artifact_crashed_write_is_never_served(spark, sf_dir, tmp_path,
+                                               monkeypatch):
+    """A write that raises midway publishes nothing; a build killed
+    outright leaves only a ``.tmp-*`` dir. The next call clears both,
+    builds, and serves a complete artifact."""
+    import glob
+    import os
+
+    import pytest
+
+    from cstore_fdw_spark.operators import artifact
+
+    store = _fresh_store(tmp_path, monkeypatch)
+    corpus = _corpus_copy(tmp_path, sf_dir)
+    rows = spark.range(100).repartition(4)
+
+    def crash(path):
+        rows.write.mode("overwrite").parquet(path)
+        raise RuntimeError("killed midway")
+
+    with pytest.raises(RuntimeError, match="killed midway"):
+        artifact(spark, corpus, "probe", (), crash)
+    slots = glob.glob(os.path.join(store, "cstore_probe_*"))
+    assert len(slots) == 1 and os.listdir(slots[0]) == []
+    killed = os.path.join(slots[0], ".tmp-killed")
+    os.makedirs(killed)
+    with open(os.path.join(killed, "part-0.parquet"), "wb") as fh:
+        fh.write(b"PAR1 truncated")
+
+    path = artifact(spark, corpus, "probe", (),
+                    lambda p: rows.write.mode("overwrite").parquet(p))
+    assert os.listdir(slots[0]) == [os.path.basename(path)]
+    assert spark.read.parquet(path).count() == 100
+
+
+def test_executors_import_the_zip_of_this_source(spark):
+    """The shipped package zip is named by the source fingerprint, not by
+    pid, so a recycled pid can never ship an older process's code."""
+    from cstore_fdw_spark.session import package_fingerprint
+
+    assert (f"cstore_fdw_spark_pkg_{package_fingerprint()}.zip"
+            in spark.sparkContext._python_includes)
 
 
 def test_connected_components_from_pairs_shared_loop(spark):
