@@ -31,11 +31,12 @@ footers/file listings, never data.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import time
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 from dataclasses import dataclass, field
 from typing import Any
 from uuid import uuid4
@@ -394,10 +395,7 @@ class CStoreCatalog:
         meta = self._load_meta(name)  # raises if the table doesn't exist
         self._drop_registered(meta)
         if "filename" in meta.options:
-            data = self._data_path(meta)
-            shutil.rmtree(data, ignore_errors=True)
-            shutil.rmtree(data + ".compact.tmp", ignore_errors=True)
-            shutil.rmtree(data + ".compact.old", ignore_errors=True)
+            self._remove_data_location(meta)
         shutil.rmtree(self.table_path(name))
 
     def clone_table(self, src: str, dst: str,
@@ -491,15 +489,12 @@ class CStoreCatalog:
                     full = os.path.join(path, entry)
                     shutil.rmtree(full) if os.path.isdir(full) else os.remove(full)
             if "filename" in meta.options:
-                data = self._data_path(meta)
-                # Also clear compaction leftovers: after a compact crash
-                # in the rename window, a surviving data.compact.old would
-                # be restored by the next read()'s _recover_compact and
-                # resurrect truncated rows (default-path tables are safe
-                # because those dirs live inside table_path).
-                shutil.rmtree(data, ignore_errors=True)
-                shutil.rmtree(data + ".compact.tmp", ignore_errors=True)
-                shutil.rmtree(data + ".compact.old", ignore_errors=True)
+                # Also clear swap/stage leftovers: after a crash in the
+                # swap's rename window, a surviving data.compact.old
+                # would be restored by the next read()'s _recover_compact
+                # and resurrect truncated rows (default-path tables are
+                # safe because those dirs live inside table_path).
+                self._remove_data_location(meta)
             # Bump the epoch BEFORE setting the floor: a truncate issued
             # when history_floor == write_epoch (no appends since the
             # last floor raise) would otherwise leave the floor
@@ -511,6 +506,14 @@ class CStoreCatalog:
             meta.history_floor = meta.write_epoch  # history is gone
             meta.file_stats = {}
             self._save_meta(meta)
+
+    def _remove_data_location(self, meta: TableMeta) -> None:
+        """Delete a custom ``filename`` location with its sibling swap
+        (``.compact.old``) and staging (``.stage.*``) dirs."""
+        data = self._data_path(meta)
+        for p in [data, data + ".compact.old",
+                  *glob.glob(glob.escape(data) + ".stage.*")]:
+            shutil.rmtree(p, ignore_errors=True)
 
     def _data_path(self, meta: TableMeta) -> str:
         """Where the table's data files live: the ``filename`` option's
@@ -587,103 +590,47 @@ class CStoreCatalog:
                 raise CStoreError(f'column "{f_.name}" missing from input')
             cols.append(F.col(f_.name).cast(f_.dataType).alias(f_.name))
         aligned = df.select(*cols)
-        sort_by = meta.options.get("sort_by")
-        if sort_by:
-            # reference advises loading sorted for skip efficiency
-            # (README.md:287-294); sortWithinPartitions keeps it shuffle-free
-            aligned = aligned.sortWithinPartitions(*sort_by.split(","))
-        stripe_rows = meta.options.get("stripe_row_count",
-                                       DEFAULT_STRIPE_ROW_COUNT)
-        # stage the batch to a sibling temp dir (the long, distributed
-        # part — unserialized), then COMMIT under the table's writer
-        # lock:
-        #   append → stamp files with the next ``e{epoch:012d}-`` prefix
-        #     inside the staging dir, move them in, and only then save
-        #     the epoch to the metadata — the VISIBILITY commit. read()
-        #     ignores files stamped above the committed epoch, so a
-        #     crash mid-move leaves an invisible partial batch (cleaned
-        #     by the next locked writer via :meth:`_recover_orphans`),
-        #     and an in-process failure rolls the moved files back.
-        #   overwrite → the compact two-rename swap (+ its crash
-        #     recovery), so readers see the old or the new table, never
-        #     an empty window.
+        # stage the batch (the long, distributed part — unserialized),
+        # then COMMIT under the table's writer lock:
+        #   append → :meth:`_commit_partial` with no base epoch: stamp
+        #     the files with the next ``e{epoch:012d}-`` prefix, move
+        #     them in, and only then save the epoch to the metadata —
+        #     the VISIBILITY commit. read() ignores files stamped above
+        #     the committed epoch, so a crash mid-move leaves an
+        #     invisible partial batch (cleaned by the next locked writer
+        #     via :meth:`_recover_orphans`), and an in-process failure
+        #     rolls the moved files back.
+        #   overwrite → the two-rename swap (+ its crash recovery), so
+        #     readers see the old or the new table, never an empty
+        #     window.
         # The epoch is what ADD COLUMN's backfill watermark compares
         # against (O(1) metadata vs listing every file). Move cost is
         # O(batch files) — the same order as the reference's per-stripe
         # footer rewrite (cstore_writer.c:344-357); an object-store
         # deployment would commit a manifest instead of renaming.
-        fmt = self._format(meta)
-        data_path = self._data_path(meta)
-        staged = data_path + f".insert.{uuid4().hex[:8]}"
-        writer = (aligned.write.mode("overwrite")
-                  .option("maxRecordsPerFile", str(stripe_rows * 10)))
-        for k, v in self._writer_options(meta).items():
-            writer = writer.option(k, v)
-        part = meta.options.get("partition_by")
-        if part:
-            writer = writer.partitionBy(*part.split(","))
-        _save_df(writer, fmt, staged)
-        try:
+        with self._stage_write(meta, aligned) as staged:
+            if not overwrite:
+                self._commit_partial(name, None, staged, [])
+                return
             with self._writer_lock(name):
                 # re-read the committed epoch under the lock: another
                 # writer may have appended while this batch was staging
                 meta = self._load_meta(name)
-                self._recover_orphans(meta, fmt)
+                self._recover_orphans(meta, self._format(meta))
                 epoch = meta.write_epoch + 1
-                prefix = f"e{epoch:012d}-"
-                # bake final names (and drop _SUCCESS/.crc) inside the
-                # staging dir — invisible until the move below
-                for root, _dirs, files in os.walk(staged):
-                    for fn in files:
-                        if fn.startswith(("_", ".")):
-                            os.remove(os.path.join(root, fn))
-                        else:
-                            os.rename(os.path.join(root, fn),
-                                      os.path.join(root, prefix + fn))
-                if overwrite:
-                    old_path = data_path + ".compact.old"
-                    # epoch first: if the swap never happens the bump is
-                    # a harmless gap; saving AFTER the swap would make
-                    # the new files orphan-deletable in the crash window
-                    meta.write_epoch = epoch
-                    meta.history_floor = epoch  # prior snapshots die
-                    self._save_meta(meta)
-                    if os.path.isdir(data_path):
-                        os.rename(data_path, old_path)
-                    os.rename(staged, data_path)  # commit point
-                    shutil.rmtree(old_path, ignore_errors=True)
-                    # zone maps for the new files land in a second save;
-                    # a crash in between just means footer-fallback for
-                    # this batch until the next commit reconciles
-                    self._reconcile_file_stats(meta)
-                    self._save_meta(meta)
-                else:
-                    moved: list[tuple[str, str]] = []
-                    try:
-                        for root, _dirs, files in os.walk(staged):
-                            rel = os.path.relpath(root, staged)
-                            dest = (data_path if rel == "."
-                                    else os.path.join(data_path, rel))
-                            os.makedirs(dest, exist_ok=True)
-                            for fn in files:
-                                s_, d_ = (os.path.join(root, fn),
-                                          os.path.join(dest, fn))
-                                os.replace(s_, d_)
-                                moved.append((s_, d_))
-                    except BaseException:
-                        # roll the partial batch back out of the table —
-                        # the append either fully lands or not at all
-                        for s_, d_ in reversed(moved):
-                            try:
-                                os.replace(d_, s_)
-                            except OSError:
-                                pass
-                        raise
-                    meta.write_epoch = epoch
-                    self._reconcile_file_stats(meta)
-                    self._save_meta(meta)  # visibility commit
-        finally:
-            shutil.rmtree(staged, ignore_errors=True)
+                _stamp(staged, epoch)
+                # epoch first: if the swap never happens the bump is a
+                # harmless gap; saving AFTER the swap would make the new
+                # files orphan-deletable in the crash window
+                meta.write_epoch = epoch
+                meta.history_floor = epoch  # prior snapshots die
+                self._save_meta(meta)
+                _swap_in(self._data_path(meta), staged)
+                # zone maps for the new files land in a second save; a
+                # crash in between just means footer-fallback for this
+                # batch until the next commit reconciles
+                self._reconcile_file_stats(meta)
+                self._save_meta(meta)
 
     def compact(self, name: str, zorder_by: list[str] | None = None,
                 zorder_bits: int | None = None,
@@ -785,85 +732,47 @@ class CStoreCatalog:
         if not old_files:
             return 0
         df = self.read(name, as_of_epoch=cutoff)
-        stripe_rows = meta.options.get("stripe_row_count",
-                                       DEFAULT_STRIPE_ROW_COUNT)
-        rows_per_file = stripe_rows * 10
         total = df.count()
-        part = meta.options.get("partition_by")
-        zspec = meta.options.get("zorder_by")
-        if part:
-            df = df.repartition(*part.split(","))
-        elif zspec and total:
-            # re-cluster the consolidated cold window on the persisted
-            # Morton order (same contract as compact)
-            from cstore_fdw_spark.sources.zorder import zorder_by as _zorder
-            df = _zorder(df, zspec.split(","),
-                         max(1, -(-total // rows_per_file)),
-                         bits=int(meta.options.get("zorder_bits", 16)))
-        elif total:
-            df = df.repartition(max(1, -(-total // rows_per_file)))
-        sort_by = meta.options.get("sort_by")
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by.split(","))
-        tmp_path = data_path + ".compact.tmp"
-        old_path = data_path + ".compact.old"
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        if total:
-            writer = (df.write.mode("overwrite")
-                      .option("maxRecordsPerFile", str(rows_per_file)))
-            for k, v in self._writer_options(meta).items():
-                writer = writer.option(k, v)
-            if part:
-                writer = writer.partitionBy(*part.split(","))
-            _save_df(writer, fmt, tmp_path)
-        else:
-            os.makedirs(tmp_path, exist_ok=True)
-        prefix = f"e{cutoff:012d}-"
-        for root, _dirs, files in os.walk(tmp_path):
-            for fn in files:
-                if fn.startswith(("_", ".")):
-                    os.remove(os.path.join(root, fn))
-                else:
-                    os.rename(os.path.join(root, fn),
-                              os.path.join(root, prefix + fn))
-        with self._writer_lock(name):
-            # optimistic commit: the staged consolidation covers only
-            # files ≤ cutoff, which concurrent INSERTs never touch (new
-            # batches stamp epochs above the committed write_epoch), so
-            # an epoch advance alone does NOT invalidate it — the new
-            # files simply ride along via the live listing below. A
-            # concurrent REWRITE does invalidate it (the whole dir was
-            # replaced); every rewrite commit raises history_floor, so
-            # that is the conflict signal. The meta saved is re-loaded
-            # here — never the copy from operation start, whose
-            # write_epoch may be stale (saving it would regress the
-            # epoch and orphan-collect a concurrently committed batch).
-            fresh = self._load_meta(name)
-            if fresh.history_floor != meta.history_floor:
-                shutil.rmtree(tmp_path, ignore_errors=True)
-                raise CStoreConcurrentWriteError(
-                    f'concurrent rewrite of "{name}" invalidated this '
-                    "vacuum; re-run it")
-            # kept (newer-epoch) files ride along as hard links — zero
-            # data copied, and the swap stays the atomic commit point.
-            # Logically dropped files must NOT be linked back in: the
-            # swap removes their bytes, completing their GC.
-            dropped = set(fresh.dropped_files)
-            for p in _data_files(data_path, fmt):
-                if _file_epoch(p) > cutoff \
-                        and os.path.relpath(p, data_path) not in dropped:
+        # re-cluster the consolidated cold window on the table's layout
+        # (persisted z-order included — same contract as compact)
+        out = self._cluster(meta, df, total) if total else None
+        with self._stage_write(meta, out) as staged:
+            _stamp(staged, cutoff)
+            with self._writer_lock(name):
+                # optimistic commit: the staged consolidation covers only
+                # files ≤ cutoff, which concurrent INSERTs never touch
+                # (new batches stamp epochs above the committed
+                # write_epoch), so an epoch advance alone does NOT
+                # invalidate it — the new files simply ride along via the
+                # live listing below. A concurrent REWRITE does
+                # invalidate it (the whole dir was replaced); every
+                # rewrite commit raises history_floor, so that is the
+                # conflict signal. The meta saved is re-loaded here —
+                # never the copy from operation start, whose write_epoch
+                # may be stale (saving it would regress the epoch and
+                # orphan-collect a concurrently committed batch).
+                fresh = self._load_meta(name)
+                if fresh.history_floor != meta.history_floor:
+                    raise CStoreConcurrentWriteError(
+                        f'concurrent rewrite of "{name}" invalidated this '
+                        "vacuum; re-run it")
+                # kept (newer-epoch) files ride along as hard links —
+                # zero data copied, and the swap stays the atomic commit
+                # point. Logically dropped files must NOT be linked back
+                # in: the swap removes their bytes, completing their GC.
+                dropped = set(fresh.dropped_files)
+                for p in _data_files(data_path, fmt):
                     rel = os.path.relpath(p, data_path)
-                    dest = os.path.join(tmp_path, rel)
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    os.link(p, dest)
-            os.rename(data_path, old_path)
-            os.rename(tmp_path, data_path)
-            shutil.rmtree(old_path)
-            fresh.dropped_files = []
-            fresh.history_floor = cutoff
-            self._reconcile_file_stats(fresh)
-            self._save_meta(fresh)
-            meta = fresh
+                    if _file_epoch(p) > cutoff and rel not in dropped:
+                        dest = os.path.join(staged, rel)
+                        os.makedirs(os.path.dirname(dest), exist_ok=True)
+                        os.link(p, dest)
+                _swap_in(data_path, staged)
+                fresh.dropped_files = []
+                fresh.history_floor = cutoff
+                self._reconcile_file_stats(fresh)
+                self._save_meta(fresh)
+                meta = fresh
         self._refresh_registered(meta)
         new_old = sum(1 for p in _data_files(data_path, fmt)
                       if _file_epoch(p) <= cutoff)
@@ -887,14 +796,8 @@ class CStoreCatalog:
         semantics: only TRUE deletes). Returns the number of rows
         deleted."""
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        for _ in range(3):
-            try:
-                return self._delete_once(name, cond)
-            except CStoreConcurrentWriteError:
-                continue
-        raise CStoreConcurrentWriteError(
-            f'DELETE on "{name}" lost the commit race 3 times to '
-            "concurrent writers; retry when ingest quiesces")
+        return self._retry(f'DELETE on "{name}"', self._delete_once,
+                           name, cond)
 
     def _delete_once(self, name: str, cond) -> int:
         meta = self._load_meta(name)
@@ -916,47 +819,71 @@ class CStoreCatalog:
         deleted = int(sum(r["count"] for r in per_file))
         touched = sorted(_uri_to_path(r["_file"]) for r in per_file)
         keep = ~cond.eqNullSafe(F.lit(True))
-        if any(not t for t in touched):
-            # python data sources report no input_file_name: file-level
-            # pruning is unavailable, the full rewrite is the safe path
-            self._rewrite(name, keep=keep)
-            return deleted
-        if len(touched) >= len(visible):
-            # nothing to prune — the full rewrite also repacks
-            self._rewrite(name, keep=keep)
+        if any(not t for t in touched) or len(touched) >= len(visible):
+            # python data sources report no input_file_name, so file-level
+            # pruning is unavailable; or there is nothing to prune. The
+            # full rewrite is the safe path and also repacks.
+            self._rewrite_once(name, keep=keep)
             return deleted
         keep_df = self._read_files(meta, touched).filter(keep)
-        staged = self._stage_write(meta, keep_df)
-        try:
+        with self._stage_write(meta, keep_df) as staged:
             fresh = self._commit_partial(
                 name, base_epoch, staged,
                 [os.path.relpath(p, data_path) for p in touched])
-        finally:
-            shutil.rmtree(staged, ignore_errors=True)
         self._refresh_registered(fresh)
         return deleted
 
-    def _stage_write(self, meta: TableMeta, df: DataFrame) -> str:
-        """Write ``df`` to a sibling staging directory with the table's
-        layout options (stripe sizing, partitioning, sort, codec); the
-        caller commits it via :meth:`_commit_partial` and removes the
-        leftover dir."""
-        data_path = self._data_path(meta)
-        staged = data_path + f".stage.{uuid4().hex[:8]}"
-        stripe_rows = meta.options.get("stripe_row_count",
-                                       DEFAULT_STRIPE_ROW_COUNT)
-        sort_by = meta.options.get("sort_by")
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by.split(","))
-        writer = (df.write.mode("overwrite")
-                  .option("maxRecordsPerFile", str(stripe_rows * 10)))
-        for k, v in self._writer_options(meta).items():
-            writer = writer.option(k, v)
+    @contextmanager
+    def _stage_write(self, meta: TableMeta, df: DataFrame | None):
+        """The catalog's one staged write: write ``df`` into its own
+        sibling ``<data>.stage.<uuid>`` dir (no reader lists it) with the
+        table's declared layout — codec/writer options, stripe-sized
+        file cap, ``partition_by`` and ``sort_by`` — and yield the dir.
+        The caller publishes it with :meth:`_commit_partial` or
+        :func:`_swap_in`; whatever is left is removed on exit. ``None``
+        stages an empty dir (a rewrite with no rows)."""
+        staged = self._data_path(meta) + f".stage.{uuid4().hex}"
+        try:
+            if df is None:
+                os.makedirs(staged)
+            else:
+                sort_by = meta.options.get("sort_by")
+                if sort_by:
+                    # reference advises loading sorted for skip efficiency
+                    # (README.md:287-294); sortWithinPartitions keeps it
+                    # shuffle-free
+                    df = df.sortWithinPartitions(*sort_by.split(","))
+                writer = df.write.mode("overwrite").option(
+                    "maxRecordsPerFile", str(_rows_per_file(meta)))
+                for k, v in self._writer_options(meta).items():
+                    writer = writer.option(k, v)
+                part = meta.options.get("partition_by")
+                if part:
+                    writer = writer.partitionBy(*part.split(","))
+                _save_df(writer, self._format(meta), staged)
+            yield staged
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+
+    def _cluster(self, meta: TableMeta, df: DataFrame,
+                 total: int) -> DataFrame:
+        """Lay out ``total`` rows for a full rewrite: co-locate each
+        partition's rows (few files per partition dir), or cluster on the
+        persisted Morton order with its ``zorder_bits``/``zorder_scale``
+        (the validator guarantees z-order never coexists with
+        sort_by/partition_by), or spread into stripe-sized files."""
         part = meta.options.get("partition_by")
         if part:
-            writer = writer.partitionBy(*part.split(","))
-        _save_df(writer, self._format(meta), staged)
-        return staged
+            return df.repartition(*part.split(","))
+        n_files = max(1, -(-total // _rows_per_file(meta)))
+        zspec = meta.options.get("zorder_by")
+        if zspec:
+            from cstore_fdw_spark.sources.zorder import zorder_by
+            return zorder_by(
+                df, zspec.split(","), n_files,
+                bits=int(meta.options.get("zorder_bits", 16)),
+                scale=str(meta.options.get("zorder_scale", "minmax")))
+        return df.repartition(n_files)
 
     def merge_into(self, name: str, source: DataFrame,
                    on: str | list[str],
@@ -1229,12 +1156,9 @@ class CStoreCatalog:
             # retrying internally would silently re-execute the
             # expensive join, and the caller owns that decision)
             if pruned:
-                staged = self._stage_write(meta, out_df)
-                try:
+                with self._stage_write(meta, out_df) as staged:
                     fresh = self._commit_partial(
                         name, base_epoch, staged, candidate_rel)
-                finally:
-                    shutil.rmtree(staged, ignore_errors=True)
                 self._refresh_registered(fresh)
             elif (stats.n_rows or 0) == 0:
                 self.truncate(name)
@@ -1290,9 +1214,6 @@ class CStoreCatalog:
         if part:
             # co-locate each partition's rows → few files per directory
             df = df.repartition(*part.split(","))
-        sort = validated.get("sort_by")
-        if sort:
-            df = df.sortWithinPartitions(*sort.split(","))
 
         def mutate(fresh: TableMeta) -> None:
             fresh.options = validated
@@ -1303,21 +1224,25 @@ class CStoreCatalog:
         self._rewrite_df(work, df, base_epoch=base_epoch, mutate=mutate)
         self._refresh_registered(meta)
 
-    def _rewrite(self, name: str, keep=None, set_opts=None) -> int:
-        # optimistic-concurrency loop: the distributed rewrite runs
-        # unlocked; if another writer committed meanwhile the lock-held
-        # commit refuses and we redo from a fresh read (which then
-        # includes the concurrent batch). Bounded — losing the race
-        # three times in a row means sustained concurrent ingest, and
-        # the caller should schedule the rewrite differently.
+    def _retry(self, what: str, once, *args):
+        """Optimistic-concurrency loop: the distributed rewrite in
+        ``once`` runs unlocked; if another writer committed meanwhile the
+        lock-held commit refuses and ``once`` redoes from a fresh read
+        (which then includes the concurrent batch). Bounded — losing the
+        race three times in a row means sustained concurrent ingest, and
+        the caller should schedule the rewrite differently."""
         for _ in range(3):
             try:
-                return self._rewrite_once(name, keep, set_opts)
+                return once(*args)
             except CStoreConcurrentWriteError:
                 continue
         raise CStoreConcurrentWriteError(
-            f'rewrite of "{name}" lost the commit race 3 times to '
-            "concurrent writers; retry when ingest quiesces")
+            f"{what} lost the commit race 3 times to concurrent writers; "
+            "retry when ingest quiesces")
+
+    def _rewrite(self, name: str, keep=None, set_opts=None) -> int:
+        return self._retry(f'rewrite of "{name}"', self._rewrite_once,
+                           name, keep, set_opts)
 
     def _rewrite_once(self, name: str, keep=None, set_opts=None) -> int:
         meta = self._load_meta(name)
@@ -1343,57 +1268,24 @@ class CStoreCatalog:
             self.truncate(name)
             self._refresh_registered(meta)
             return 0
-        stripe_rows = meta.options.get("stripe_row_count",
-                                       DEFAULT_STRIPE_ROW_COUNT)
-        rows_per_file = stripe_rows * 10
-        part = meta.options.get("partition_by")
-        # explicit compact(zorder_by=..) wins; else a previously
-        # persisted zorder_by re-clusters every rewrite (the validator
-        # guarantees z-order never coexists with sort_by/partition_by)
-        zspec = ((set_opts or {}).get("zorder_by")
-                 or meta.options.get("zorder_by"))
-        n_files = max(1, -(-total // rows_per_file))
-        if part:
-            # co-locate each partition's rows so the writer emits few
-            # files per partition directory
-            df = df.repartition(*part.split(","))
-        elif zspec:
-            from cstore_fdw_spark.sources.zorder import zorder_by as _zorder
-            zbits = int((set_opts or {}).get(
-                "zorder_bits", meta.options.get("zorder_bits", 16)))
-            zscale = str((set_opts or {}).get(
-                "zorder_scale", meta.options.get("zorder_scale", "minmax")))
-            df = _zorder(df, zspec.split(","), n_files, bits=zbits,
-                         scale=zscale)
-        else:
-            df = df.repartition(n_files)
-        sort_by = meta.options.get("sort_by")
-        if sort_by:
-            df = df.sortWithinPartitions(*sort_by.split(","))
-        data_path = self._data_path(meta)
-        tmp_path = data_path + ".compact.tmp"
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        writer = (df.write.mode("overwrite")
-                  .option("maxRecordsPerFile", str(rows_per_file)))
-        for k, v in self._writer_options(meta).items():
-            writer = writer.option(k, v)
-        if part:
-            writer = writer.partitionBy(*part.split(","))
-        _save_df(writer, fmt, tmp_path)
         mutate = None
         if set_opts:
+            # explicit compact(zorder_by=..) wins over the persisted
+            # layout, for this write and in the committed options
+            meta.options.update(set_opts)
+
             def mutate(fresh_meta):
                 fresh_meta.options.update(set_opts)
-        fresh = self._commit_swap(name, base_epoch, tmp_path, mutate)
-        self._refresh_registered(fresh)
-        return sum(1 for _ in _data_files(data_path, fmt))
+        self._rewrite_df(meta, self._cluster(meta, df, total),
+                         base_epoch, mutate)
+        return sum(1 for _ in _data_files(self._data_path(meta), fmt))
 
-    def _commit_swap(self, name: str, base_epoch: int, tmp_path: str,
+    def _commit_swap(self, name: str, base_epoch: int, staged: str,
                      mutate=None) -> TableMeta:
         """Commit a staged full-table rewrite under the per-table writer
         lock (optimistic concurrency — the Iceberg commit protocol shape).
 
-        The expensive distributed write into ``tmp_path`` ran UNLOCKED
+        The expensive distributed write into ``staged`` ran UNLOCKED
         against the file set visible at ``base_epoch``. Here the
         metadata is re-loaded under the lock: if any other writer
         committed in the meantime (``write_epoch`` moved, or another
@@ -1402,26 +1294,20 @@ class CStoreCatalog:
         would regress ``write_epoch``, making the concurrent files
         orphan-collectable by :meth:`_recover_orphans` (a data-loss
         path). The commit is refused with
-        :class:`CStoreConcurrentWriteError` instead and the stage is
-        removed. On success the FRESHLY loaded meta (never the caller's
-        possibly-stale copy) is mutated and saved; ``write_epoch`` is
-        bumped so rewrite commits are themselves visible to other
-        in-flight optimistic writers.
+        :class:`CStoreConcurrentWriteError` instead. On success the
+        FRESHLY loaded meta (never the caller's possibly-stale copy) is
+        mutated and saved; ``write_epoch`` is bumped so rewrite commits
+        are themselves visible to other in-flight optimistic writers.
 
         ``mutate(fresh_meta)`` applies caller metadata edits (e.g.
         RENAME COLUMN's schema change) before the save."""
         with self._writer_lock(name):
             fresh = self._load_meta(name)
             if fresh.write_epoch != base_epoch:
-                shutil.rmtree(tmp_path, ignore_errors=True)
                 raise CStoreConcurrentWriteError(
                     f'concurrent write to "{name}" (epoch {base_epoch} '
                     f"→ {fresh.write_epoch}) invalidated this rewrite")
-            data_path = self._data_path(fresh)
-            old_path = data_path + ".compact.old"
-            os.rename(data_path, old_path)
-            os.rename(tmp_path, data_path)
-            shutil.rmtree(old_path)
+            _swap_in(self._data_path(fresh), staged)
             if mutate is not None:
                 mutate(fresh)
             if fresh.backfill_files or fresh.backfill_watermark:
@@ -1448,21 +1334,25 @@ class CStoreCatalog:
             self._save_meta(fresh)
         return fresh
 
-    def _commit_partial(self, name: str, base_epoch: int, staged: str,
-                        dropped: list[str]) -> TableMeta:
+    def _commit_partial(self, name: str, base_epoch: int | None,
+                        staged: str, dropped: list[str]) -> TableMeta:
         """Commit a FILE-PRUNED rewrite: the files staged in ``staged``
         replace exactly the ``dropped`` (data-dir-relative) files;
         every other data file keeps its inode, name, and bytes — a
         selective MERGE/DELETE touches O(affected files), not O(table).
+        A ``None`` ``base_epoch`` marks an append (insert): nothing is
+        replaced, so there is no conflict check and no history-floor
+        raise.
 
-        Protocol (insert-append commit + a tombstone list):
+        Protocol (a move-in commit + a tombstone list):
         1. under the writer lock, verify no concurrent commit
            (``write_epoch`` still ``base_epoch`` — else refuse, see
            :class:`CStoreConcurrentWriteError`);
         2. stamp the staged files with the next epoch and move them into
            the data dir — INVISIBLE until the metadata commit (readers
            filter epochs above the committed one; a crash here leaves
-           them for :meth:`_recover_orphans`);
+           them for :meth:`_recover_orphans`, an in-process failure
+           moves them back out);
         3. save the metadata with the bumped epoch and ``dropped`` added
            to ``dropped_files`` — the ATOMIC commit point: new files
            become visible and dropped files invisible in the same
@@ -1471,26 +1361,16 @@ class CStoreCatalog:
            crash between 3 and 4 is repaired by the next locked
            writer's idempotent GC).
         """
-        fmt = None
         with self._writer_lock(name):
             fresh = self._load_meta(name)
-            fmt = self._format(fresh)
-            if fresh.write_epoch != base_epoch:
-                shutil.rmtree(staged, ignore_errors=True)
+            if base_epoch is not None and fresh.write_epoch != base_epoch:
                 raise CStoreConcurrentWriteError(
                     f'concurrent write to "{name}" (epoch {base_epoch} '
                     f"→ {fresh.write_epoch}) invalidated this rewrite")
-            self._recover_orphans(fresh, fmt)
+            self._recover_orphans(fresh, self._format(fresh))
             data_path = self._data_path(fresh)
             epoch = fresh.write_epoch + 1
-            prefix = f"e{epoch:012d}-"
-            for root, _dirs, files in os.walk(staged):
-                for fn in files:
-                    if fn.startswith(("_", ".")):
-                        os.remove(os.path.join(root, fn))
-                    else:
-                        os.rename(os.path.join(root, fn),
-                                  os.path.join(root, prefix + fn))
+            _stamp(staged, epoch)
             moved: list[tuple[str, str]] = []
             try:
                 for root, _dirs, files in os.walk(staged):
@@ -1504,33 +1384,29 @@ class CStoreCatalog:
                         os.replace(s_, d_)
                         moved.append((s_, d_))
             except BaseException:
+                # roll the partial batch back out of the table — the
+                # commit either fully lands or not at all
                 for s_, d_ in reversed(moved):
-                    try:
+                    with suppress(OSError):
                         os.replace(d_, s_)
-                    except OSError:
-                        pass
                 raise
             fresh.write_epoch = epoch
-            # replaced files back every older snapshot — history ends here
-            fresh.history_floor = epoch
-            fresh.dropped_files = sorted(
-                set(fresh.dropped_files) | set(dropped))
+            if base_epoch is not None:
+                # replaced files back every older snapshot — history
+                # ends here
+                fresh.history_floor = epoch
+                fresh.dropped_files = sorted(dropped)
             # reconcile BEFORE the commit save so the staged files'
             # zone maps become visible atomically with the files; the
             # dropped files' entries linger until the post-unlink save
             self._reconcile_file_stats(fresh)
             self._save_meta(fresh)  # COMMIT
-            for rel in fresh.dropped_files:
-                try:
-                    os.remove(os.path.join(data_path, rel))
-                    ftr = os.path.join(data_path, rel) + ".footer"
-                    if os.path.exists(ftr):  # cstore sidecar
-                        os.remove(ftr)
-                except OSError:
-                    pass
-            fresh.dropped_files = []
-            self._reconcile_file_stats(fresh)
-            self._save_meta(fresh)
+            if fresh.dropped_files:
+                for rel in fresh.dropped_files:
+                    _remove_data_file(os.path.join(data_path, rel))
+                fresh.dropped_files = []
+                self._reconcile_file_stats(fresh)
+                self._save_meta(fresh)
         return fresh
 
     @contextmanager
@@ -1567,17 +1443,9 @@ class CStoreCatalog:
             return
         for p in list(_data_files(data_path, fmt)):
             if _file_epoch(p) > meta.write_epoch:
-                os.remove(p)
-                if os.path.exists(p + ".footer"):  # cstore sidecar
-                    os.remove(p + ".footer")
+                _remove_data_file(p)
         for rel in meta.dropped_files:
-            try:
-                os.remove(os.path.join(data_path, rel))
-                ftr = os.path.join(data_path, rel) + ".footer"
-                if os.path.exists(ftr):  # cstore sidecar
-                    os.remove(ftr)
-            except OSError:
-                pass
+            _remove_data_file(os.path.join(data_path, rel))
         meta.dropped_files = []
 
     def _recover_compact(self, meta: TableMeta, fmt: str) -> None:
@@ -1586,8 +1454,7 @@ class CStoreCatalog:
         Crash between the two swap renames → no ``data`` dir but a
         ``data.compact.old`` holding every row: roll the rename back.
         Crash after the swap but before cleanup → both dirs exist and
-        ``data`` is the compacted truth: drop the leftovers. A stale
-        ``.compact.tmp`` is always disposable (it's re-created)."""
+        ``data`` is the compacted truth: drop the leftovers."""
         data_path = self._data_path(meta)
         old_path = data_path + ".compact.old"
         if os.path.isdir(old_path):
@@ -2076,10 +1943,11 @@ class CStoreCatalog:
             meta = self._load_meta(name)
             if self._format(meta) == "cstore":
                 raise CStoreError(
-                    "DROP COLUMN is not supported on storage_format="
+                    "ALTER COLUMN TYPE is not supported on storage_format="
                     "cstore tables: the v1.7 format stores no column "
-                    "names, so position is the mapping and dropping a "
-                    "middle column would shift it; convert first via "
+                    "types, so the reader decodes each column by its "
+                    "declared type and a new type would misread the "
+                    "existing data; convert first via "
                     "alter_table_layout(storage_format='parquet')")
             schema = meta.schema()
             if column not in schema.fieldNames():
@@ -2162,7 +2030,7 @@ class CStoreCatalog:
     def _rewrite_df(self, meta: TableMeta, df: DataFrame,
                     base_epoch: int, mutate=None) -> None:
         """Commit ``df`` as the table's new contents via the compact swap
-        protocol (temp dir + staged write + lock-validated swap).
+        protocol (:meth:`_stage_write` + lock-validated swap).
         ``base_epoch`` is the committed ``write_epoch`` the caller's
         ``df`` was computed from; the commit is refused with
         :class:`CStoreConcurrentWriteError` if another writer has
@@ -2170,19 +2038,8 @@ class CStoreCatalog:
         immutable layout facts (format/options/data path) for the staged
         write — the metadata actually saved is re-loaded under the
         lock."""
-        fmt = self._format(meta)
-        data_path = self._data_path(meta)
-        tmp_path = data_path + ".compact.tmp"
-        shutil.rmtree(tmp_path, ignore_errors=True)
-        writer = df.write.mode("overwrite")
-        for k, v in self._writer_options(meta).items():
-            writer = writer.option(k, v)
-        part = meta.options.get("partition_by")
-        if part:
-            writer = writer.partitionBy(*part.split(","))
-        _save_df(writer, fmt, tmp_path)
-        fresh = self._commit_swap(name=meta.name, base_epoch=base_epoch,
-                                  tmp_path=tmp_path, mutate=mutate)
+        with self._stage_write(meta, df) as staged:
+            fresh = self._commit_swap(meta.name, base_epoch, staged, mutate)
         self._refresh_registered(fresh)
 
     # -------------------------------------------------------------- views
@@ -2652,6 +2509,47 @@ def _file_stats_from_footer(path: str) -> dict[str, list]:
         if lo is not None and hi is not None:
             out[col] = [lo, hi]
     return out
+
+
+def _rows_per_file(meta: TableMeta) -> int:
+    """Stripe-sized file cap of a staged write: ten stripes per file."""
+    return meta.options.get("stripe_row_count",
+                            DEFAULT_STRIPE_ROW_COUNT) * 10
+
+
+def _stamp(staged: str, epoch: int) -> None:
+    """Bake final names inside a staging dir — still invisible to
+    readers: drop Spark's ``_``/``.`` side files (_SUCCESS, .crc) and
+    prefix the rest with ``e{epoch:012d}-``."""
+    prefix = f"e{epoch:012d}-"
+    for root, _dirs, files in os.walk(staged):
+        for fn in files:
+            if fn.startswith(("_", ".")):
+                os.remove(os.path.join(root, fn))
+            else:
+                os.rename(os.path.join(root, fn),
+                          os.path.join(root, prefix + fn))
+
+
+def _swap_in(data_path: str, staged: str) -> None:
+    """Publish a staged dir as the whole data dir: ``data →
+    .compact.old``, ``staged → data``, then drop the old dir. Two
+    renames, not one atomic step — ``CStoreCatalog._recover_compact``
+    repairs a crash between them."""
+    old_path = data_path + ".compact.old"
+    if os.path.isdir(data_path):
+        os.rename(data_path, old_path)
+    os.rename(staged, data_path)  # commit point
+    shutil.rmtree(old_path, ignore_errors=True)
+
+
+def _remove_data_file(path: str) -> None:
+    """Unlink a data file and its cstore ``.footer`` sidecar; a file
+    that is already gone is fine (the GC that calls this is
+    idempotent)."""
+    for p in (path, path + ".footer"):
+        with suppress(OSError):
+            os.remove(p)
 
 
 def _epoch_expr():

@@ -706,16 +706,6 @@ def shingle_arrays(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.expr(_SHINGLE_ARR).alias("shingles"))
 
 
-def _doc_shingle_arrays(spark, sf_dir) -> DataFrame:
-    return shingle_arrays(table(spark, sf_dir, "documents"))
-
-
-def _doc_shingles(spark, sf_dir) -> DataFrame:
-    """(doc_id, shingle) exploded distinct shingles."""
-    return (_doc_shingle_arrays(spark, sf_dir)
-            .select("doc_id", F.explode("shingles").alias("shingle")))
-
-
 #: signature shape: explode distinct shingles → ONE codegen md5 per
 #: shingle → 32-way MIN hash-aggregate per doc. The aggregation is
 #: map-side-combined, so what shuffles is one 33-column row per doc per
@@ -742,20 +732,6 @@ def shingle_hashes(docs_with_shingles: DataFrame) -> DataFrame:
             .select("doc_id", F.explode("shingles").alias("s"))
             .selectExpr("doc_id", "md5(cast(s as binary)) AS m")
             .selectExpr("doc_id", _X_FROM_MD5, _H60_FROM_MD5))
-
-
-def minhash_signatures(docs_with_shingles: DataFrame) -> DataFrame:
-    """(doc_id, n_sh, s0..s{N-1}) — 32 universal-hash MIN aggregates over
-    the exploded shingle hashes (partial aggregation makes the exchange
-    one row per doc)."""
-    # parsed-SQL form, one py4j call per aggregate (the Column-chain
-    # form cost ~6 round-trips x 32 hashes per build; same tree — see
-    # the simhash_signatures rationale)
-    mins = [F.expr(f"min(({a} * x + {b}) % {P31}) AS s{i}")
-            for i, (a, b) in enumerate(_MH_COEFFS)]
-    return (shingle_hashes(docs_with_shingles)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_sh"), *mins))
 
 
 def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:

@@ -63,6 +63,31 @@ def result_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()
 
 
+def compare(spark, duck, spec, sf_dir: str) -> dict:
+    """Run ``spec``'s Spark builder over ``sf_dir`` and its DuckDB oracle
+    on ``duck`` (views over the same files), and compare them the way the
+    driver does. An exception is recorded in ``err``, not raised."""
+    rec = {"rows_match": False, "schema_match": False, "hash_match": False,
+           "spark_rows": None, "oracle_rows": None, "err": None}
+    try:
+        sdf = spec.builder(spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+        rec["spark_rows"] = len(srows)
+        dres = duck.sql(spec.oracle)
+        dcols = dres.columns
+        drows = dres.fetchall()
+        rec["oracle_rows"] = len(drows)
+        rec["rows_match"] = len(srows) == len(drows)
+        rec["schema_match"] = (sorted(c.lower() for c in scols)
+                               == sorted(c.lower() for c in dcols))
+        rec["hash_match"] = (result_hash(scols, srows)
+                             == result_hash(dcols, drows))
+    except Exception as exc:  # noqa: BLE001 — recorded, not raised
+        rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
+    return rec
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--round", type=int, required=True)
@@ -89,34 +114,9 @@ def main() -> int:
     fails = []
     for i, name in enumerate(names, 1):
         clear_caches(spark)  # previous query's caches die before the next
-        spec = registry[name]
-        rec = {"rows_match": False, "schema_match": False,
-               "hash_match": False, "spark_rows": None,
-               "oracle_rows": None, "err": None}
-        try:
-            sdf = spec.builder(spark, args.sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            rec["spark_rows"] = len(srows)
-            if spec.oracle is None:
-                rec["err"] = "no_oracle (rows-only: ran, stable schema)"
-                rec["rows_match"] = rec["schema_match"] = bool(scols)
-            else:
-                dres = duck.sql(spec.oracle)
-                dcols = dres.columns
-                drows = dres.fetchall()
-                rec["oracle_rows"] = len(drows)
-                rec["rows_match"] = len(srows) == len(drows)
-                rec["schema_match"] = (
-                    sorted(c.lower() for c in scols)
-                    == sorted(c.lower() for c in dcols))
-                rec["hash_match"] = (
-                    result_hash(scols, srows) == result_hash(dcols, drows))
-        except Exception as exc:  # noqa: BLE001 — recorded, not raised
-            rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
+        rec = compare(spark, duck, registry[name], args.sf_dir)
         out[name] = rec
-        ok = rec["rows_match"] and rec["schema_match"] and (
-            rec["hash_match"] or spec.oracle is None)
+        ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
         if not ok:
             fails.append(name)
         print(f"[{i:3}/{len(names)}] {'ok  ' if ok else 'FAIL'} {name}",

@@ -35,7 +35,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "scripts"))
 
-from local_gate import result_hash  # noqa: E402
+from local_gate import compare  # noqa: E402
 
 #: order-insensitive multiset checksum over integer columns: per row
 #: fold cols (sorted by name) through acc = (acc*1000003 + col) mod P,
@@ -188,29 +188,6 @@ def _sharded_oracle_checksums(oracle: str, aggs: list[str]) -> tuple:
     return tuple(tot)
 
 
-def collect_compare(spark, duck, spec) -> dict:
-    rec = {"rows_match": False, "schema_match": False, "hash_match": False,
-           "spark_rows": None, "oracle_rows": None, "err": None}
-    sdf = spec.builder(spark, args.g_dir)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-    rec["spark_rows"] = len(srows)
-    if spec.oracle is None:
-        rec["err"] = "no_oracle (rows-only: ran, stable schema)"
-        rec["rows_match"] = rec["schema_match"] = bool(scols)
-        return rec
-    dres = duck.sql(spec.oracle)
-    dcols = dres.columns
-    drows = dres.fetchall()
-    rec["oracle_rows"] = len(drows)
-    rec["rows_match"] = len(srows) == len(drows)
-    rec["schema_match"] = (sorted(c.lower() for c in scols)
-                           == sorted(c.lower() for c in dcols))
-    rec["hash_match"] = (result_hash(scols, srows)
-                         == result_hash(dcols, drows))
-    return rec
-
-
 def main() -> int:
     import duckdb
 
@@ -238,7 +215,7 @@ def main() -> int:
                     or name in (args.shard_oracle_by_lang or []):
                 rec = checksum_compare(spark, duck, spec)
             else:
-                rec = collect_compare(spark, duck, spec)
+                rec = compare(spark, duck, spec, args.g_dir)
         except Exception as exc:  # noqa: BLE001 — recorded, not raised
             rec = {"rows_match": False, "schema_match": False,
                    "hash_match": False, "spark_rows": None,
@@ -246,8 +223,7 @@ def main() -> int:
                    "err": f"{type(exc).__name__}: {exc}"[:500]}
         rec["sec"] = round(time.time() - t0, 1)
         out[name] = rec
-        ok = rec["rows_match"] and rec["schema_match"] and (
-            rec["hash_match"] or spec.oracle is None)
+        ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
         if not ok:
             fails.append(name)
         print(f"[{i:3}/{len(args.queries)}] {'ok  ' if ok else 'FAIL'} "

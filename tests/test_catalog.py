@@ -158,6 +158,11 @@ def test_alter_column_type_guard(spark, catalog):
         catalog.alter_column_type("t", "s", "int")  # not implicit — reject
     rows = catalog.read("t").collect()
     assert rows[0].a == 1
+    # the cstore refusal names the operation it refuses
+    catalog.create_table("tc", "a int", storage_format="cstore")
+    with pytest.raises(CStoreError,
+                       match="ALTER COLUMN TYPE is not supported"):
+        catalog.alter_column_type("tc", "a", "bigint")
 
 
 def test_analyze_stats(spark, catalog):
@@ -463,8 +468,10 @@ def test_truncate_clears_compact_leftovers(spark, catalog, tmp_path):
     catalog.create_table("ftl", "a int", filename=loc)
     catalog.insert("ftl", spark.createDataFrame([(1,), (2,)], "a int"))
     shutil.copytree(loc, loc + ".compact.old")  # simulated crash leftover
+    shutil.copytree(loc, loc + ".stage.crashed")  # a crashed write's stage
     catalog.truncate("ftl")
     assert not os.path.exists(loc + ".compact.old")
+    assert not os.path.exists(loc + ".stage.crashed")
     assert catalog.row_count("ftl") == 0
     assert catalog.read("ftl").count() == 0  # no resurrection via recovery
     catalog.drop_table("ftl")
@@ -977,6 +984,61 @@ def test_rewrite_retries_when_concurrent_insert_commits(
     rows = {r.k for r in catalog.read("race_del").collect()}
     # delete applied AND the racing batch survived (retry re-read it)
     assert rows == set(range(3, 10)) | set(range(100, 105))
+
+
+def test_concurrent_full_rewrites_stage_apart(spark, catalog, monkeypatch):
+    # two DELETEs that both take the full-rewrite path, interleaved as
+    # A stages, B stages, A commits, B commits: each must stage into its
+    # own dir. A shared staging dir let A publish B's stage (rows 0-7),
+    # and B's retry then deleted nothing more — A's delete was lost.
+    import threading
+
+    from cstore_fdw_spark.catalog import CStoreCatalog
+    catalog.create_table("race_stage", "k long")
+    catalog.insert("race_stage",
+                   spark.range(10).selectExpr("id as k").coalesce(1))
+    orig = CStoreCatalog._commit_swap
+    a_staged, b_staged, a_done = (threading.Event() for _ in range(3))
+    calls: dict[str, int] = {}
+    errs = []
+
+    def ordered(self, name, base_epoch, staged, mutate=None):
+        me = threading.current_thread().name
+        calls[me] = calls.get(me, 0) + 1
+        if calls[me] == 1 and me == "A":
+            a_staged.set()
+            b_staged.wait(120)
+            try:
+                return orig(self, name, base_epoch, staged, mutate=mutate)
+            finally:
+                a_done.set()
+        if calls[me] == 1 and me == "B":
+            b_staged.set()
+            a_done.wait(120)
+        return orig(self, name, base_epoch, staged, mutate=mutate)
+
+    def run(pred):
+        try:
+            catalog.delete_where("race_stage", pred)
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+            a_staged.set()
+            b_staged.set()
+            a_done.set()
+
+    monkeypatch.setattr(CStoreCatalog, "_commit_swap", ordered)
+    ta = threading.Thread(target=run, args=("k < 3",), name="A")
+    tb = threading.Thread(target=run, args=("k >= 8",), name="B")
+    ta.start()
+    assert a_staged.wait(120)  # B starts staging only after A staged
+    tb.start()
+    ta.join(300)
+    tb.join(300)
+    assert not ta.is_alive() and not tb.is_alive()
+    assert not errs
+    assert calls == {"A": 1, "B": 2}  # B's conflicted commit retried
+    assert sorted(r.k for r in catalog.read("race_stage").collect()) \
+        == [3, 4, 5, 6, 7]
 
 
 def test_merge_conflict_surfaces_error_and_loses_nothing(

@@ -697,3 +697,33 @@ def test_operators_change_confs_only_through_scoped_primitives():
     assert not offenders, (
         "conf changes outside override_conf / offline_broadcast_budget:\n"
         + "\n".join(offenders))
+
+
+def test_catalog_stages_every_write_through_one_path():
+    """Lint: the catalog writes data files only inside ``_stage_write``,
+    which gives each call its own ``.stage.<uuid>`` dir. A second write
+    path, or a fixed staging dir such as the old ``.compact.tmp``, lets
+    two concurrent rewrites publish each other's stage."""
+    import ast
+    import pathlib
+
+    import cstore_fdw_spark.catalog as cat
+
+    src = pathlib.Path(cat.__file__).read_text()
+    offenders = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Name)
+                    and child.func.id == "_save_df"
+                    and fn != "_stage_write"):
+                offenders.append(f"catalog.py:{child.lineno} in {fn}")
+            inner = child.name if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            visit(child, inner)
+
+    visit(ast.parse(src), None)
+    assert not offenders, (
+        "_save_df calls outside _stage_write:\n" + "\n".join(offenders))
+    assert ".compact.tmp" not in src

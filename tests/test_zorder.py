@@ -315,9 +315,10 @@ def test_zorder_quantile_scale_handles_skew(spark, tmp_path):
         assert tuple(got) == tuple(base)
 
 
-def test_zorder_quantile_through_catalog(spark, catalog):
+def test_zorder_quantile_through_catalog(spark, catalog, monkeypatch):
     """zorder_scale persists in the table options and re-applies on
-    later rewrites, like the column list itself."""
+    later rewrites (compact and vacuum), like the column list itself."""
+    import cstore_fdw_spark.sources.zorder as zorder_mod
     catalog.create_table("zq", "a long, b long", stripe_row_count=1000)
     catalog.insert("zq", spark.range(30_000).select(
         (F.xxhash64("id") % 1000).alias("a"),
@@ -326,7 +327,19 @@ def test_zorder_quantile_through_catalog(spark, catalog):
     meta = catalog._load_meta("zq")
     assert meta.options["zorder_scale"] == "quantile"
     assert catalog.read("zq").count() == 30_000
+    scales = []
+    real = zorder_mod.zorder_by
+
+    def spy(*args, **kwargs):
+        scales.append(kwargs.get("scale"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(zorder_mod, "zorder_by", spy)
     catalog.compact("zq")  # re-clusters with the persisted scale
     assert catalog.read("zq").count() == 30_000
+    assert scales == ["quantile"]
+    catalog.vacuum("zq")  # so does the consolidating vacuum
+    assert catalog.read("zq").count() == 30_000
+    assert scales == ["quantile", "quantile"]
     with pytest.raises(CStoreError, match="zorder_scale"):
         catalog.compact("zq", zorder_by=["a"], zorder_scale="nope")
