@@ -25,6 +25,7 @@ Determinism conventions (required for oracle hash-parity):
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import os
 import shutil
@@ -34,6 +35,7 @@ from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType
 
 from cstore_fdw_spark.session import (
     EXCLUDED_RULES_CONF, offline_broadcast_budget, package_fingerprint,
@@ -136,6 +138,16 @@ def clear_caches(spark: SparkSession) -> None:
 BUILT_ARTIFACTS: list[str] = []
 
 
+def file_stats(path: str) -> str:
+    """One ``relpath|size|mtime_ns`` line per file under ``path`` (or for
+    ``path`` itself when it is a file): a stat, no data read."""
+    root = Path(path)
+    files = (sorted(f for f in root.rglob("*") if f.is_file())
+             if root.is_dir() else [root])
+    return "".join(f"{f.relative_to(root)}|{st.st_size}|{st.st_mtime_ns}\n"
+                   for f in files for st in (f.stat(),))
+
+
 def artifact(spark, sf_dir: str, tag: str, params,
              write: Callable[[str], object]) -> str:
     """The maintained-artifact store: the directory ``write(dir)`` filled
@@ -148,11 +160,7 @@ def artifact(spark, sf_dir: str, tag: str, params,
     sf_dir = os.path.abspath(sf_dir)
     key = hashlib.md5(f"{sf_dir}|{params!r}".encode()).hexdigest()[:16]
     slot = os.path.join(tempfile.gettempdir(), f"cstore_{tag}_{key}")
-    fp = hashlib.md5(package_fingerprint().encode())
-    for f in sorted(p for p in Path(sf_dir).rglob("*") if p.is_file()):
-        st = f.stat()
-        rel = f.relative_to(sf_dir)
-        fp.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}\n".encode())
+    fp = hashlib.md5((package_fingerprint() + file_stats(sf_dir)).encode())
     path = os.path.join(slot, fp.hexdigest()[:16])
     if os.path.isdir(path):
         return path
@@ -208,18 +216,47 @@ def load_all() -> dict[str, QuerySpec]:
     return REGISTRY
 
 
+#: abs path -> ((file_stats, parquet confs), inferred schema); one entry
+#: per input path. ``clear_caches`` leaves it alone: it holds only
+#: metadata that depends on nothing but file identity and confs.
+_SCHEMAS: dict[str, tuple[tuple[str, tuple[str, ...]], StructType]] = {}
+
+#: session confs that decide the types Spark infers for a Parquet file
+#: (e.g. ``nanosAsLong`` for events.ts, ``binaryAsString``)
+_PARQUET_CONF_PREFIXES = ("spark.sql.parquet.", "spark.sql.legacy.parquet.")
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, inferred (a
+    one-task Spark job) once per file version and Parquet conf set: the
+    key is every file's (relpath, size, mtime_ns) under ``path`` plus the
+    session's ``spark.sql.parquet.*``/``spark.sql.legacy.parquet.*``
+    values. Cache the schema, never a DataFrame: a self-join (q21) needs
+    two relations with their own attribute ids."""
+    path = os.path.abspath(path)
+    # one JVM call; pyspark's conf.getAll makes two per entry (~46 ms)
+    confs = spark._jsparkSession.conf().getAll().mkString("\n").split("\n")
+    key = (file_stats(path),
+           tuple(sorted(c for c in confs
+                        if c.startswith(_PARQUET_CONF_PREFIXES))))
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != key:
+        hit = _SCHEMAS[path] = (key, spark.read.parquet(path).schema)
+    return copy.deepcopy(hit[1])  # StructType.add mutates in place
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
+    path = f"{sf_dir}/{name}.parquet"
+    schema = parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events" and isinstance(schema["ts"].dataType, LongType):
         # events.parquet stores TIMESTAMP(NANOS), which Spark's vectorized
         # reader rejects; with spark.sql.legacy.parquet.nanosAsLong (set in
         # session.ENGINE_CONFS) it arrives as a long. Truncate to micros
         # with integer division (nanos ~1.7e18 exceed double's 2^53, so no
         # float path) — matching DuckDB's truncating nanos→micros read.
         from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
 
 

@@ -15,8 +15,8 @@ from pyspark.sql import Column, functions as F
 from pyspark.sql.window import Window
 
 from cstore_fdw_spark.operators import (
-    BUILT_ARTIFACTS, artifact, override_conf, register, release_build_caches,
-    spread, table, track_cache)
+    BUILT_ARTIFACTS, artifact, override_conf, parquet_schema, register,
+    release_build_caches, spread, table, track_cache)
 from cstore_fdw_spark.session import ADAPTIVE_CONF
 
 N_QUERIES = 5    # demo query set: vec_id < 5
@@ -787,8 +787,8 @@ def _cached_codebook(spark, sf_dir, tag, params, build):
             df = df.coalesce(1)
         df.write.mode("overwrite").parquet(path)
 
-    return spark.read.parquet(
-        artifact(spark, sf_dir, f"cb_{tag}", params, write))
+    path = artifact(spark, sf_dir, f"cb_{tag}", params, write)
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 #: artifact tags whose frame is corpus-sized (one row per vector) —

@@ -321,8 +321,6 @@ class CStoreDataSource(DataSource):
 
 
 def register_cstore(spark) -> None:
-    """Idempotently register the data source with a session."""
-    try:
-        spark.dataSource.register(CStoreDataSource)
-    except Exception:  # noqa: BLE001 — already registered
-        pass
+    """Register the data source with a session; registering again
+    replaces the earlier registration (Spark logs it, never raises)."""
+    spark.dataSource.register(CStoreDataSource)

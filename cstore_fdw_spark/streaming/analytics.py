@@ -11,6 +11,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cstore_fdw_spark.operators import parquet_schema
 from cstore_fdw_spark.operators.analytics import hdr_bucket_idx
 
 
@@ -22,7 +23,7 @@ def read_lineitem_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maintained); catalog-table streams use the guarded readers. See
     # tests/test_streaming.py::test_every_readstream_guarded_or_exempt.
     return (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet").schema)
+        parquet_schema(spark, f"{sf_dir}/lineitem.parquet"))
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "lineitem.parquet")
         .parquet(sf_dir))
@@ -61,7 +62,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream-rewrite-guard: exempt — READ-ONLY fixture parquet, not a
     # catalog table (same rationale as read_lineitem_stream above).
     return (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/events.parquet").schema)
+        parquet_schema(spark, f"{sf_dir}/events.parquet"))
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir))
@@ -333,7 +334,7 @@ def run_bloom_available_now(spark: SparkSession, sf_dir: str,
     from cstore_fdw_spark.functions.portable_hash import spark_w32
 
     ordr = (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/orders.parquet").schema)
+        parquet_schema(spark, f"{sf_dir}/orders.parquet"))
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "orders.parquet")
         .parquet(sf_dir))

@@ -20,6 +20,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cstore_fdw_spark.operators import parquet_schema
+
 WATERMARK = "1 hour"
 SESSION_GAP = "30 minutes"
 
@@ -39,7 +41,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file-source streams need a directory: stream the sf dir with a glob
     # pinned to the events file
     stream = (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/events.parquet").schema)
+        parquet_schema(spark, f"{sf_dir}/events.parquet"))
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir))

@@ -20,6 +20,7 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor, StatefulProcessorHandle)
 from pyspark.sql import types as T
 
+from cstore_fdw_spark.operators import parquet_schema
 from cstore_fdw_spark.session import set_conf
 
 BIG_SPENDER_THRESHOLD = 10_000.0
@@ -466,10 +467,10 @@ def run_holt_available_now(spark, sf_dir: str,
 
         # stream-rewrite-guard: exempt — READ-ONLY staged copy of the
         # fixture parquet, not a catalog table (same rationale as
-        # streaming/analytics.read_events_stream).
+        # streaming/analytics.read_events_stream). Its schema is src's:
+        # 0_events.parquet is a byte copy and the sentinels share it.
         stream = (spark.readStream
-                  .schema(spark.read.parquet(f"{stage}/0_events.parquet")
-                          .schema)
+                  .schema(parquet_schema(spark, src))
                   .option("maxFilesPerTrigger", "1")
                   .parquet(stage))
         hourly = holt_hourly_stream(stream)

@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cstore_fdw_spark.operators import parquet_schema
 from cstore_fdw_spark.operators.text import PII_EMAIL_RE, PII_PHONE_RE
 
 
@@ -30,7 +31,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maintained); catalog-table streams use the guarded readers. See
     # tests/test_streaming.py::test_every_readstream_guarded_or_exempt.
     return (spark.readStream.schema(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
+        parquet_schema(spark, f"{sf_dir}/documents.parquet"))
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir))

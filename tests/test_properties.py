@@ -495,6 +495,84 @@ def test_artifact_crashed_write_is_never_served(spark, sf_dir, tmp_path,
     assert spark.read.parquet(path).count() == 100
 
 
+def test_table_second_read_runs_no_spark_job(spark, sf_dir):
+    """Schema inference is a one-task Spark job; ``table()`` pays it once
+    per file version, so reading an unchanged file again runs no job and
+    returns the same rows."""
+    from collections import Counter
+
+    from cstore_fdw_spark.operators import table
+
+    first = table(spark, sf_dir, "nation")
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-cache", "second table() read")
+    try:
+        second = table(spark, sf_dir, "nation")
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("schema-cache") == []
+    assert Counter(second.collect()) == Counter(first.collect())
+
+
+def test_table_sees_a_column_added_by_a_rewrite(spark, tmp_path):
+    """Rewriting the file at the same path changes its (size, mtime), so
+    the cached schema misses and the new column shows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cstore_fdw_spark.operators import table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    again = table(spark, str(tmp_path), "t")
+    assert again.columns == ["a", "b"]
+    assert sorted(again.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_table_schema_follows_parquet_confs(spark, tmp_path):
+    """The Parquet confs decide inferred types: the same file reads as
+    BINARY, then as STRING once ``binaryAsString`` is on."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from cstore_fdw_spark.operators import table
+    from cstore_fdw_spark.session import set_conf
+
+    pq.write_table(pa.table({"v": pa.array([b"ab"], pa.binary())}),
+                   tmp_path / "b.parquet")
+    key = "spark.sql.parquet.binaryAsString"
+    undo = set_conf(spark, key, "false")
+    try:
+        assert isinstance(table(spark, str(tmp_path), "b").schema["v"]
+                          .dataType, T.BinaryType)
+        spark.conf.set(key, "true")
+        as_str = table(spark, str(tmp_path), "b")
+        assert isinstance(as_str.schema["v"].dataType, T.StringType)
+        assert as_str.collect() == [("ab",)]
+    finally:
+        undo()
+
+
+def test_table_events_matches_an_uncached_read(spark, sf_dir):
+    """``table(…, "events")`` equals a plain ``spark.read.parquet`` with
+    the same nanos→micros ``ts`` conversion, in schema and rows."""
+    from collections import Counter
+
+    from pyspark.sql import types as T
+
+    from cstore_fdw_spark.operators import table
+
+    got = table(spark, sf_dir, "events")
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    if isinstance(raw.schema["ts"].dataType, T.LongType):
+        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    assert got.schema == raw.schema
+    assert Counter(got.collect()) == Counter(raw.collect())
+
+
 def test_executors_import_the_zip_of_this_source(spark):
     """The shipped package zip is named by the source fingerprint, not by
     pid, so a recycled pid can never ship an older process's code."""
@@ -727,3 +805,37 @@ def test_catalog_stages_every_write_through_one_path():
     assert not offenders, (
         "_save_df calls outside _stage_write:\n" + "\n".join(offenders))
     assert ".compact.tmp" not in src
+
+
+def test_parquet_inputs_read_through_the_schema_cache():
+    """Lint: operator and streaming code never calls
+    ``<session>.read.parquet(…)`` outside ``parquet_schema``. Such a call
+    infers the schema with a Spark job on every build; read with
+    ``spark.read.schema(parquet_schema(spark, path)).parquet(path)``."""
+    import ast
+    import pathlib
+
+    import cstore_fdw_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+
+    def visit(node, fn, path):
+        for child in ast.iter_child_nodes(node):
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == "parquet"
+                    and isinstance(child.func.value, ast.Attribute)
+                    and child.func.value.attr == "read"
+                    and fn != "parquet_schema"):
+                offenders.append(
+                    f"{path.relative_to(root)}:{child.lineno} in {fn}")
+            inner = child.name if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
+            visit(child, inner, path)
+
+    for sub in ("operators", "streaming"):
+        for path in sorted((root / sub).rglob("*.py")):
+            visit(ast.parse(path.read_text()), None, path)
+    assert not offenders, (
+        "read.parquet( outside parquet_schema:\n" + "\n".join(offenders))
